@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.json4s._
@@ -1859,10 +1859,12 @@ object ManifestTable {
     new File(root, s"$ManifestName.v$v")
 
   /** Version embedded in a generation dir name (`b3-v7-nonce`,
-    * `b3-c7-nonce`, `b3-d7-g0-nonce`, `b3-u7-g0-nonce`, `chg-v7-nonce`;
-    * legacy `b3-7`): the second dash token with its operation marker
-    * (v=write, c=recluster, d=delete, u=update, m=row-level merge)
-    * stripped. Unparseable →
+    * `b3-c7-nonce`, `b3-d7-g0-nonce`, `b3-u7-g0-nonce`, `chg-v7-nonce`,
+    * `b3-rb7-nonce`, and the keyed writer's stage dirs
+    * `stage-v7-wnonce`, `stage-d7-wnonce`, `stage-rb7-wnonce`; legacy
+    * `b3-7`): the second dash token with its operation marker (v=write,
+    * c=compact/collapse/recluster, d=delete, dd=row delta, u=update,
+    * m=row-level merge, rb=rebucket) stripped. Unparseable →
     * 0, i.e. always collectible, matching the pre-versioned-naming
     * behavior. The marker set must cover every writer's naming scheme:
     * a dir GC can't date is a dir GC may collect out from under an
@@ -1875,7 +1877,7 @@ object ManifestTable {
     else {
       val tok = parts(1)
         .dropWhile(c => c == 'v' || c == 'c' || c == 'd' || c == 'u' ||
-          c == 'm')
+          c == 'm' || c == 'r' || c == 'b')
       if (tok.nonEmpty && tok.forall(_.isDigit)) tok.toLong else 0L
     }
   }
@@ -2373,13 +2375,9 @@ object ManifestTable {
     * reads are untouched; it lives INSIDE the immutable generation dir,
     * so GC/time-travel liveness needs no extra bookkeeping and the
     * manifest stays metadata-sized (it records only WHICH columns are
-    * indexed — [[BucketGen.search]]).
-    */
-  /** Serialize one built filter into its sidecar file — callable from the
-    * DRIVER (fresh-write path) or an EXECUTOR (the backfill verb writes
-    * each generation's filter from the task that reduced it, so a
-    * many-generation retrofit never funnels every filter's bytes through
-    * the driver).
+    * indexed — [[BucketGen.search]]). Called from the EXECUTOR that
+    * reduced the generation's filter (the keyed writer and the backfill
+    * verb alike), so no filter's bytes funnel through the driver.
     */
   private[sources] def writeSidecarFile(
       conf: org.apache.hadoop.conf.Configuration, genDir: String,
@@ -2410,26 +2408,6 @@ object ManifestTable {
     }
   }
 
-  private def writeSearchSidecar(spark: SparkSession, dest: File,
-      column: String, kind: String, expected: Long): Unit = {
-    import org.apache.spark.util.sketch.BloomFilter
-    // one columnar re-read of the files just written: IO-local, one
-    // column, and only on explicit searchCols opt-in
-    val vals = spark.read.parquet(dest.toString).select(col(column)).na.drop()
-    val zero = BloomFilter.create(math.max(expected, 1L), SearchFpp)
-    val bf = vals.rdd.treeAggregate(zero)(
-      (f, row) => {
-        kind match {
-          case "long" => f.putLong(row.get(0).asInstanceOf[Number].longValue)
-          case _ => f.putString(row.getString(0))
-        }
-        f
-      },
-      (a, b) => { a.mergeInPlace(b); a })
-    writeSidecarFile(spark.sessionState.newHadoopConf(), dest.toString,
-      column, kind, bf)
-  }
-
   /** Load a generation's search sidecar for `column`: (domain, filter), or
     * None when absent/unreadable/unknown-layout — the caller keeps the
     * generation (a sidecar problem must never become a wrong skip).
@@ -2451,88 +2429,88 @@ object ManifestTable {
       } finally in.close()
     }.toOption
 
-  /** Write one generation dir, observing per-column min/max DURING the write
-    * pass (`Dataset.observe` — an accumulator-backed aggregate on the same
-    * physical plan, zero extra scans of the bucket). `searchCols` (opt-in)
-    * additionally writes a membership sidecar per eligible column — the
-    * engine's analogue of the reference warehouse's search optimization
-    * service: equality lookups on columns whose values scatter across
-    * every generation (so min/max spans keep everything) can then skip
-    * the generations that provably don't contain the needle.
+  /** One generation's stats aggregate: min/max per tracked field, an NDV
+    * sketch per eligible column and a KLL sketch per numeric stats column
+    * — grouped per key by [[writeKeyedGens]] and per existing generation
+    * by [[buildIndexes]]; [[decodeStats]] reads a result row back.
     */
-  def writeGen(df: DataFrame, dest: File, statsCols: Seq[String],
-      searchCols: Seq[String] = Nil)
-      : (Map[String, ColStat], Long, Seq[String], Map[String, String],
-         Map[String, String]) = {
-    val present = statsCols.flatMap(c =>
-      if (df.columns.contains(c))
-        statsKind(df.schema(c).dataType).map(k => c -> k)
-      else None)
-    // the row count rides the same Observation as the min/max stats — the
-    // write already materializes every row, so the count is free and the
-    // manifest can answer bare COUNT(*) queries without a scan; NDV
-    // sketches for the eligible tracked columns ride it too
-    val ndvEl = ndvEligible(df.schema, statsCols, searchCols)
-    val kllEl = kllEligible(df.schema, statsCols)
-    val obs = Observation()
-    val metrics = count(lit(1)).as("rows_") +:
-      (present.flatMap { case (c, _) =>
-        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")) } ++
-       ndvEl.map { case (c, k) => ndvAgg(df.schema, c, k) } ++
-       kllEl.map(kllAggCol))
-    val eligible = searchCols.distinct.flatMap { c =>
-      if (!df.columns.contains(c)) None
-      else searchKind(df.schema(c).dataType).map(k => c -> k)
-    }
-    val writer = df.observe(obs, metrics.head, metrics.tail: _*)
-      .write.mode("overwrite")
-    // searched columns ALSO get parquet-native bloom filters: the
-    // generation sidecar skips whole dirs, and within the dirs a lookup
-    // does open, parquet-mr's row-group bloom check (driven by the
-    // pushed-down equality, stock Spark) skips row groups — the two
-    // levels compose like Snowflake's partition pruning + search access
-    // path
-    eligible.foldLeft(writer) { case (w, (c, _)) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }.parquet(dest.toString)
-    val row = obs.get
-    val nRows = row("rows_") match { case n: Number => n.longValue; case _ => -1L }
-    val stats = present.flatMap {
-        case (c, "str") => (row(s"min_$c"), row(s"max_$c")) match {
+  private def statsAggs(schema: StructType, statFields: Seq[(String, String)],
+      ndvCols: Seq[(String, String)], kllCols: Seq[String]): Seq[Column] =
+    statFields.flatMap { case (c, _) =>
+      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")) } ++
+      ndvCols.map { case (c, k) => ndvAgg(schema, c, k) } ++
+      kllCols.map(kllAggCol)
+
+  /** A generation's decoded stats: bounds, NDV sketches, KLL sketches. */
+  private type GenStats =
+    (Map[String, ColStat], Map[String, String], Map[String, String])
+
+  /** Decode one [[statsAggs]] row into the manifest's per-generation
+    * metadata: domain-tagged bounds (null bounds or document-sized
+    * strings record no stat), NDV sketches, KLL sketches.
+    */
+  private def decodeStats(r: Row, statFields: Seq[(String, String)],
+      ndvCols: Seq[(String, String)], kllCols: Seq[String]): GenStats = {
+    val bounds = statFields.flatMap {
+      case (c, "str") =>
+        (r.getAs[Any](s"min_$c"), r.getAs[Any](s"max_$c")) match {
           case (lo: String, hi: String)
-              if lo.length <= MaxStringStatLen && hi.length <= MaxStringStatLen =>
+              if lo.length <= MaxStringStatLen &&
+                hi.length <= MaxStringStatLen =>
             Some(c -> ColStat("str", lo, hi))
-          case _ => None // null bounds or document-sized values: no stat
+          case _ => None
         }
-        case (c, _) =>
-          (statValue(row(s"min_$c")), statValue(row(s"max_$c"))) match {
-            case (Some(lo), Some(hi)) => Some(c -> ColStat("num",
-              lo.bigDecimal.toPlainString, hi.bigDecimal.toPlainString))
-            case _ => None
-          }
-      }.toMap
-    val ndv = ndvEl.flatMap { case (c, _) =>
-      ndvB64(row(s"ndv_$c")).map(c -> _)
+      case (c, _) =>
+        (statValue(r.getAs[Any](s"min_$c")),
+          statValue(r.getAs[Any](s"max_$c"))) match {
+          case (Some(lo), Some(hi)) => Some(c -> ColStat("num",
+            lo.bigDecimal.toPlainString, hi.bigDecimal.toPlainString))
+          case _ => None
+        }
     }.toMap
-    val kllM = kllEl.flatMap(c => ndvB64(row(s"kll_$c")).map(c -> _)).toMap
-    val searched = eligible.map { case (c, kind) =>
-      writeSearchSidecar(df.sparkSession, dest, c, kind, math.max(nRows, 1L))
-      c
-    }
-    (stats, nRows, searched, ndv, kllM)
+    val ndv = ndvCols.flatMap { case (c, _) =>
+      ndvB64(r.getAs[Any](s"ndv_$c")).map(c -> _)
+    }.toMap
+    val kll = kllCols.flatMap(c =>
+      ndvB64(r.getAs[Any](s"kll_$c")).map(c -> _)).toMap
+    (bounds, ndv, kll)
   }
 
-  /** Write MANY generation dirs from one keyed frame in ONE pass — the
-    * shared machinery under recluster cells and group-replacement
-    * buckets: `keyed` must hold exactly `schema`'s columns plus a LONG
-    * `keyCol`; ONE aggregation job computes every key's row count and
-    * per-column bounds, ONE repartition-by-key dynamic-partitioning
-    * write lands each key in its own dir (all rows of a key co-locate
-    * in one task), each key dir renames into `relFor(key)` (a metadata
-    * move), and sidecars build per key. The alternative — one filtered
-    * scan + observe-write PER KEY — re-reads the frame key-count times;
-    * this shape reads it twice regardless of how many generations come
-    * out.
+  /** The rows of `gens` under `schema`, each tagged in `keyCol` with the
+    * key its generation is paired with — ONE scan however many
+    * generations, the key resolving per row from the generation dir of
+    * the file it was read from. This is what a keyed rewrite of several
+    * generations reads: every row stays bound to the bucket (or
+    * generation) it came from, whatever its columns hash to. Generation
+    * dir names are unique within a table.
+    */
+  private def readKeyed(spark: SparkSession, root: File, schema: StructType,
+      gens: Seq[(Long, BucketGen)], keyCol: String): DataFrame = {
+    val keyOfDir = gens.map { case (k, g) => new File(g.path).getName -> k }.toMap
+    val keyOf = udf { (f: String) =>
+      val end = f.lastIndexOf('/')
+      keyOfDir(f.substring(f.lastIndexOf('/', end - 1) + 1, end))
+    }
+    spark.read.schema(schema)
+      .parquet(gens.map { case (_, g) => new File(root, g.path).toString }: _*)
+      .withColumn(keyCol, keyOf(input_file_name()))
+  }
+
+  /** THE generation writer: write MANY generation dirs from one keyed
+    * frame in ONE pass — every rewrite of the table layer goes through
+    * it (merge buckets, delete/update generations, compaction, delta
+    * collapse, group replacement, merge-on-read deltas, rebucket,
+    * recluster cells). `keyed` must hold exactly `schema`'s columns plus
+    * a LONG `keyCol`, and is read twice, so a caller whose frame is more
+    * than a plain scan persists it: ONE aggregation job computes every
+    * key's row count, bounds and sketches, ONE repartition-by-key
+    * dynamic-partitioning write lands each key in its own dir (all rows
+    * of a key co-locate in one task, so a key's dir is ONE file unless
+    * `spread` fans it out), each key dir renames into `relFor(key)` (a
+    * metadata move), and sidecars build for every key in one more job.
+    * A key with no rows writes no generation. The alternative — one
+    * filtered scan + write PER KEY — re-reads the frame key-count times
+    * and leaves one file per input partition in every dir.
     */
   private def writeKeyedGens(spark: SparkSession, root: File,
       keyed: DataFrame, keyCol: String, schema: StructType,
@@ -2545,13 +2523,9 @@ object ManifestTable {
       else None)
     val ndvEl = ndvEligible(schema, statsCols, searchCols)
     val kllEl = kllEligible(schema, statsCols)
-    val aggExprs = count(lit(1)).as("rows_") +:
-      (statFields.flatMap { case (c, _) =>
-        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")) } ++
-       ndvEl.map { case (c, k) => ndvAgg(schema, c, k) } ++
-       kllEl.map(kllAggCol))
     val keyRows = keyed.groupBy(col(keyCol))
-      .agg(aggExprs.head, aggExprs.tail: _*)
+      .agg(count(lit(1)).as("rows_"), statsAggs(schema, statFields, ndvEl,
+        kllEl): _*)
       .collect().sortBy(_.getLong(0)) // bounded: one small row per key
     val search = searchCols.distinct.filter(c =>
       schema.fieldNames.contains(c) && searchKind(schema(c).dataType).nonEmpty)
@@ -2571,6 +2545,12 @@ object ManifestTable {
           .repartition(n, col(keyCol), salt)
       }
       .write.partitionBy(keyCol).mode("overwrite")
+    // searched columns ALSO get parquet-native bloom filters: the
+    // generation sidecar skips whole dirs, and within the dirs a lookup
+    // does open, parquet-mr's row-group bloom check (driven by the
+    // pushed-down equality, stock Spark) skips row groups — the two
+    // levels compose like Snowflake's partition pruning + search access
+    // path
     search.foldLeft(writer) { (w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }.parquet(tmpDir.toString)
@@ -2581,30 +2561,8 @@ object ManifestTable {
       val src = new File(tmpDir, s"$keyCol=$k")
       require(src.isDirectory && src.renameTo(dest),
         s"cannot move keyed generation dir $src -> $dest")
-      val nRows = r.getAs[Long]("rows_")
-      val genStats = statFields.flatMap {
-        case (c, "str") =>
-          (r.getAs[Any](s"min_$c"), r.getAs[Any](s"max_$c")) match {
-            case (lo: String, hi: String)
-                if lo.length <= MaxStringStatLen &&
-                  hi.length <= MaxStringStatLen =>
-              Some(c -> ColStat("str", lo, hi))
-            case _ => None
-          }
-        case (c, _) =>
-          (statValue(r.getAs[Any](s"min_$c")),
-            statValue(r.getAs[Any](s"max_$c"))) match {
-            case (Some(lo), Some(hi)) => Some(c -> ColStat("num",
-              lo.bigDecimal.toPlainString, hi.bigDecimal.toPlainString))
-            case _ => None
-          }
-      }.toMap
-      val ndv = ndvEl.flatMap { case (c, _) =>
-        ndvB64(r.getAs[Any](s"ndv_$c")).map(c -> _)
-      }.toMap
-      val kllM = kllEl.flatMap(c =>
-        ndvB64(r.getAs[Any](s"kll_$c")).map(c -> _)).toMap
-      k -> BucketGen(rel, genStats, nRows, search, ndv, kllM)
+      val (genStats, ndv, kll) = decodeStats(r, statFields, ndvEl, kllEl)
+      k -> BucketGen(rel, genStats, r.getAs[Long]("rows_"), search, ndv, kll)
     }
     // sidecars for EVERY new generation build in ONE distributed pass
     // (per-partition partial filters keyed by (dir, column), merged by
@@ -2765,6 +2723,9 @@ object ManifestTable {
   }
 
   private val BucketCol = "__graft_bucket"
+
+  /** Key column of a per-generation rewrite ([[rewriteGens]]). */
+  private val GenCol = "__graft_gen"
 
   /** Change-feed metadata columns (the Delta CDF column names). */
   val ChangeTypeCol = "_change_type"
@@ -3636,92 +3597,87 @@ object ManifestTable {
         // the EXPENSIVE work starts here (past any intent wait/restart):
         // this is the derivation the contention specs count
         mergeDeriveCount.incrementAndGet(): Unit
-        val results = touched.map { b =>
-          val inc = incoming.filter(col(BucketCol) === b).drop(BucketCol)
-          val (out, chg): (DataFrame, Option[DataFrame]) =
-            prev.buckets.get(b) match {
-              case Some(gens) if !tb.append && !tb.overwrite =>
-                val existing = spark.read.schema(unified)
-                  .parquet(gens.map(g => new File(root, g.path).toString): _*)
-                delKeys match {
-                  case Some(dk) =>
-                    // replace-by-key: drop every existing row whose key
-                    // tuple is in this bucket's delete slice, then UPSERT
-                    // the batch rows (a batch key not in the slice must
-                    // still replace its existing row, exactly as in the
-                    // delete-free branch) — within-bucket work only (keys
-                    // hash to one bucket)
-                    val slice = dk.filter(col(BucketCol) === b).drop(BucketCol)
-                    val cond = tb.mergeKeys
-                      .map(k => existing(k) <=> slice(k)).reduce(_ && _)
-                    val merged = graft.ingest.MergeUpsert
-                      .upsert(existing.join(slice, cond, "left_anti"),
-                        inc, tb.mergeKeys)
-                      .select(unified.fieldNames.map(col).toIndexedSeq: _*)
-                    val changes = if (!tb.changeFeed) None else {
-                      // delete preimages: rows removed by the slice whose
-                      // key does NOT come back in this batch (a returning
-                      // key is an update, not a delete+insert pair)
-                      val removed = existing.join(slice, cond, "left_semi")
-                      val incKeys = inc
-                        .select(tb.mergeKeys.map(col).toIndexedSeq: _*)
-                      val back = tb.mergeKeys
-                        .map(k => removed(k) <=> incKeys(k)).reduce(_ && _)
-                      val deletes = removed.join(incKeys, back, "left_anti")
-                        .withColumn(ChangeTypeCol, lit("delete"))
-                      Some(tagChanges(existing, inc, tb.mergeKeys)
-                        .unionByName(deletes))
-                    }
-                    (merged, changes)
-                  case None =>
-                    val merged = graft.ingest.MergeUpsert
-                      .upsert(existing, inc, tb.mergeKeys)
-                      .select(unified.fieldNames.map(col).toIndexedSeq: _*)
-                    val changes = if (!tb.changeFeed) None
-                      else Some(tagChanges(existing, inc, tb.mergeKeys))
-                    (merged, changes)
-                }
-              case _ =>
-                (inc, if (!tb.changeFeed) None
-                  else Some(inc.withColumn(ChangeTypeCol, lit("insert"))))
+        val target = manifest.version + 1
+        val inc = incoming.drop(BucketCol)
+        // merge mode reads every touched bucket's generations in ONE scan,
+        // each row tagged with the bucket it was read from; append and
+        // overwrite never read existing data
+        val existingGens =
+          if (tb.append || tb.overwrite) Nil
+          else touched.flatMap(b => prev.buckets.getOrElse(b, Nil).map(b -> _))
+        // ONE plan for the whole table: a merge key hashes to exactly one
+        // bucket, so upserting (and slicing deletes) across all touched
+        // buckets at once equals doing it bucket by bucket
+        val (out, changes): (DataFrame, Option[DataFrame]) =
+          if (existingGens.isEmpty)
+            (incoming, if (!tb.changeFeed) None
+              else Some(inc.withColumn(ChangeTypeCol, lit("insert"))))
+          else {
+            val tagged = readKeyed(spark, root, unified, existingGens, BucketCol)
+            val existing = tagged.drop(BucketCol)
+            def keyMatch(l: DataFrame, r: DataFrame) =
+              tb.mergeKeys.map(k => l(k) <=> r(k)).reduce(_ && _)
+            // replace-by-key: drop every existing row whose key tuple is
+            // in the delete set, then UPSERT the batch rows (a batch key
+            // not in the set must still replace its existing row)
+            val slice = delKeys.map(_.drop(BucketCol))
+            val kept = slice.fold(tagged)(sl =>
+              tagged.join(sl, keyMatch(tagged, sl), "left_anti"))
+            // persisted: the keyed writer reads its frame twice
+            val merged = graft.ingest.MergeUpsert
+              .upsert(kept, incoming, tb.mergeKeys)
+              .select((unified.fieldNames :+ BucketCol).map(col).toIndexedSeq: _*)
+              .persist()
+            val chg = if (!tb.changeFeed) None else {
+              // delete preimages: rows removed by the delete set whose
+              // key does NOT come back in this batch (a returning key is
+              // an update, not a delete+insert pair)
+              val deletes = slice.map { sl =>
+                val removed = existing.join(sl, keyMatch(existing, sl),
+                  "left_semi")
+                val incKeys = inc.select(tb.mergeKeys.map(col).toIndexedSeq: _*)
+                removed.join(incKeys, keyMatch(removed, incKeys), "left_anti")
+                  .withColumn(ChangeTypeCol, lit("delete"))
+              }
+              Some(deletes.foldLeft(tagChanges(existing, inc, tb.mergeKeys))(
+                _ unionByName _))
             }
-          // one immutable generation dir per (table, bucket, ATTEMPT):
-          // named by the manifest version this commit will publish (unique
-          // across query identities — batch ids alone collide when a
-          // fresh-checkpoint restart re-runs against an existing table)
-          // PLUS the writer nonce, so two CONCURRENT writers racing for
-          // the same version can never scribble on each other's dirs —
-          // the loser's become orphans GC collects once the version is
-          // decided (the in-flight guard in [[gc]])
-          val rel = s"data/${tb.name}/b$b-v${manifest.version + 1}-$nonce"
-          val (stats, nRows, searched, ndv, kll) =
+            (merged, chg)
+          }
+        try {
+          val written = writeKeyedGens(spark, root, out, BucketCol, unified,
             // explicit batch options win; otherwise the table's RECORDED
             // layout applies, so every writer — bespoke API, SQL INSERT,
             // streaming sink — keeps tracking what the table declared
-            writeGen(out, new File(root, rel),
-              if (tb.statsCols.nonEmpty) tb.statsCols else prev.statsCols,
-              if (tb.searchCols.nonEmpty) tb.searchCols else prev.searchCols)
-          (b -> Seq(BucketGen(rel, stats, nRows, searched, ndv, kll)), chg)
-        }
-        val written = results.map(_._1).toMap
-        // the commit's change-feed delta: one immutable dir per (table,
-        // commit), written BEFORE the manifest swap like every data dir —
-        // a crash leaves an orphan the next commit's GC removes
-        val changePath = {
-          val dfs = results.flatMap(_._2)
-          if (dfs.isEmpty) None
-          else {
-            val rel = s"data/${tb.name}/chg-v${manifest.version + 1}-$nonce"
-            dfs.reduce(_ unionByName _).write.mode("overwrite")
-              .parquet(new File(root, rel).toString)
-            Some(rel)
+            if (tb.statsCols.nonEmpty) tb.statsCols else prev.statsCols,
+            if (tb.searchCols.nonEmpty) tb.searchCols else prev.searchCols,
+            tmpRel = s"data/${tb.name}/stage-v$target-w$nonce",
+            // one immutable generation dir per (table, bucket, ATTEMPT):
+            // named by the manifest version this commit will publish
+            // (unique across query identities — batch ids alone collide
+            // when a fresh-checkpoint restart re-runs against an existing
+            // table) PLUS the writer nonce, so two CONCURRENT writers
+            // racing for the same version can never scribble on each
+            // other's dirs — the loser's become orphans GC collects once
+            // the version is decided (the in-flight guard in [[gc]])
+            relFor = b => s"data/${tb.name}/b$b-v$target-$nonce").toMap
+          // the commit's change-feed delta: one immutable dir per (table,
+          // commit), written BEFORE the manifest swap like every data dir
+          // — a crash leaves an orphan the next commit's GC removes
+          val changePath = changes.map { df =>
+            val rel = s"data/${tb.name}/chg-v$target-$nonce"
+            df.write.mode("overwrite").parquet(new File(root, rel).toString)
+            rel
           }
-        }
-        Some(TableUpdate(unified.json, written, tb.append, changePath,
-          mergeKeys = tb.mergeKeys, numBuckets = tb.numBuckets,
-          replaceAll = tb.overwrite,
-          statsCols = tb.statsCols, searchCols = tb.searchCols,
-          props = tb.props ++ hwmProps))
+          // a merged bucket left with no rows publishes NO generation (its
+          // old ones drop); append and overwrite buckets always hold rows
+          Some(TableUpdate(unified.json,
+            touched.map(b => b -> written.get(b).toSeq).toMap, tb.append,
+            changePath, mergeKeys = tb.mergeKeys, numBuckets = tb.numBuckets,
+            replaceAll = tb.overwrite,
+            statsCols = tb.statsCols, searchCols = tb.searchCols,
+            props = tb.props ++ hwmProps))
+        } finally { if (out ne incoming) out.unpersist(); () }
       }
     } finally {
       incoming.unpersist(); idPersisted.foreach(_.unpersist())
@@ -3736,10 +3692,10 @@ object ManifestTable {
     * `update_preimage` (full Delta CDF shape). The preimages are what let
     * a downstream additive aggregate maintain itself DECREMENTALLY
     * (subtract preimage, add postimage — [[deltaAggregate]]) instead of
-    * rescanning groups. Bucket-local work on frames the merge already
-    * reads. In replace-by-key mode the returning-key slice rows are the
-    * same rows this computes as preimages, so that branch adds only its
-    * true deletes on top.
+    * rescanning groups. Work on the frames the merge already reads. In
+    * replace-by-key mode the returning-key slice rows are the same rows
+    * this computes as preimages, so that branch adds only its true
+    * deletes on top.
     */
   private def tagChanges(existing: DataFrame, inc: DataFrame,
       keys: Seq[String]): DataFrame = {
@@ -4456,6 +4412,42 @@ object ManifestTable {
       .map(_._1).maxOption
   }
 
+  /** Rewrite every generation `touched` selects through `rewrite` in ONE
+    * keyed pass ([[writeKeyedGens]], keyed by the generation's ordinal,
+    * persisted so a nondeterministic predicate or SET expression is
+    * evaluated once): each rewritten generation keeps its own dir,
+    * `b<bucket>-<op><version>-g<index>-<nonce>`, and the pass tracks the
+    * union of the stats, sketches and search columns the rewritten
+    * generations carried. A generation the rewrite empties drops.
+    * Returns the touched buckets' new generation lists.
+    */
+  private def rewriteGens(spark: SparkSession, root: File, table: String,
+      ts: TableState, touched: BucketGen => Boolean, op: String,
+      version: Long, nonce: String)(rewrite: DataFrame => DataFrame)
+      : Map[Long, Seq[BucketGen]] = {
+    val hits = (for {
+      (b, gens) <- ts.buckets.toSeq.sortBy(_._1)
+      (g, i) <- gens.zipWithIndex if touched(g)
+    } yield (b, i, g)).toIndexedSeq
+    val gens = hits.map(_._3)
+    val keyed = rewrite(readKeyed(spark, root, ts.schema,
+      gens.indices.map(k => k.toLong -> gens(k)), GenCol)).persist()
+    val written = try writeKeyedGens(spark, root, keyed, GenCol, ts.schema,
+        gens.flatMap(g => g.stats.keys ++ g.ndv.keys ++ g.kll.keys).distinct,
+        gens.flatMap(_.search).distinct,
+        tmpRel = s"data/$table/stage-$op$version-w$nonce",
+        relFor = { k =>
+          val (b, i, _) = hits(k.toInt)
+          s"data/$table/b$b-$op$version-g$i-$nonce"
+        }).toMap
+      finally { keyed.unpersist(); () }
+    val replaced = gens.indices.map(k => gens(k).path -> written.get(k.toLong))
+      .toMap
+    ts.buckets.collect { case (b, bg) if bg.exists(touched) =>
+      b -> bg.flatMap(g => replaced.getOrElse(g.path, Some(g)))
+    }
+  }
+
   /** Predicate delete (the warehouse `DELETE FROM t WHERE …` the
     * reference's retention jobs run; Delta's DELETE shape): remove every
     * committed row matching `cond` in ONE atomic commit, touching only
@@ -4521,25 +4513,9 @@ object ManifestTable {
         }.toSet
         def touched(g: BucketGen): Boolean =
           touchedDirs.contains(new File(root, g.path).getCanonicalPath)
-        val keep = !coalesce(cond, lit(false))
-        val rewritten = ts.buckets.flatMap { case (b, gens) =>
-          if (!gens.exists(touched)) None
-          else Some(b -> gens.zipWithIndex.flatMap { case (g, i) =>
-            if (!touched(g)) Some(g)
-            else {
-              val rel = s"data/$table/b$b-d${manifest.version + 1}-g$i-$nonce"
-              val (stats, nRows, searched, ndv, kll) = writeGen(
-                spark.read.schema(ts.schema)
-                  .parquet(new File(root, g.path).toString).filter(keep),
-                new File(root, rel),
-                (g.stats.keys.toSeq ++ g.ndv.keys ++ g.kll.keys).distinct,
-                g.search)
-              // an emptied generation drops; its dir orphans into GC
-              if (nRows == 0L) None
-              else Some(BucketGen(rel, stats, nRows, searched, ndv, kll))
-            }
-          })
-        }
+        // an emptied generation drops; its dir orphans into GC
+        val rewritten = rewriteGens(spark, root, table, ts, touched, "d",
+          manifest.version + 1, nonce)(_.filter(!coalesce(cond, lit(false))))
         // active feed: the deleted rows ARE this commit's delta
         val changePath =
           if (ts.feedFrom < 0) None
@@ -4628,36 +4604,21 @@ object ManifestTable {
         def touched(g: BucketGen): Boolean =
           touchedDirs.contains(new File(root, g.path).getCanonicalPath)
         val hit = coalesce(cond, lit(false))
+        // columns outside the SET list pass through (a rewrite's key
+        // column included)
         def applySets(df: DataFrame): DataFrame =
           // generated columns RE-DERIVE from the post-SET row, so an
           // update to a referenced column cannot leave them stale
           applyGenerated(table, ts.props, schema, df.select(
-            schema.fields.map { f =>
-              sets.get(f.name) match {
-                case Some(e) =>
-                  when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-                case None => col(f.name)
-              }
+            df.columns.map { c =>
+              sets.get(c).fold(col(c))(e =>
+                when(hit, e.cast(schema(c).dataType)).otherwise(col(c)).as(c))
             }.toIndexedSeq: _*))
         // CHECK constraints gate the post-update images of the matched
         // rows before any generation rewrites
         enforceConstraints(table, ts.props, applySets(pruned))
-        val rewritten = ts.buckets.flatMap { case (b, gens) =>
-          if (!gens.exists(touched)) None
-          else Some(b -> gens.zipWithIndex.map { case (g, i) =>
-            if (!touched(g)) g
-            else {
-              val rel = s"data/$table/b$b-u${manifest.version + 1}-g$i-$nonce"
-              val (stats, nRows, searched, ndv, kll) = writeGen(
-                applySets(spark.read.schema(schema)
-                  .parquet(new File(root, g.path).toString)),
-                new File(root, rel),
-                (g.stats.keys.toSeq ++ g.ndv.keys ++ g.kll.keys).distinct,
-                g.search)
-              BucketGen(rel, stats, nRows, searched, ndv, kll)
-            }
-          })
-        }
+        val rewritten = rewriteGens(spark, root, table, ts, touched, "u",
+          manifest.version + 1, nonce)(applySets)
         val changePath =
           if (ts.feedFrom < 0) None
           else {
@@ -5086,10 +5047,10 @@ object ManifestTable {
   /** Retrofit search sidecars and min/max stats onto EXISTING generations
     * — the `ALTER TABLE … ADD SEARCH OPTIMIZATION` analogue. The write
     * path indexes only what the writer declared at write time
-    * ([[writeGen]]); this verb closes the gap for tables that grew first
-    * and indexed later, WITHOUT touching a single data row: generation
-    * dirs keep their paths (snapshot isolation and the change feed are
-    * untouched — `logicalChange = false`), gaining only an additive
+    * ([[writeKeyedGens]]); this verb closes the gap for tables that grew
+    * first and indexed later, WITHOUT touching a single data row:
+    * generation dirs keep their paths (snapshot isolation and the change
+    * feed are untouched — `logicalChange = false`), gaining only an additive
     * `_search_*` sidecar file inside and stats entries in the manifest.
     *
     * Scale shape: per requested search column, ONE distributed pass over
@@ -5181,22 +5142,16 @@ object ManifestTable {
         //    missing any requested column's bounds or sketch --
         val statFields = stats.map(c =>
           c -> statsKind(schema(c).dataType).get)
-        val (statsByDir, ndvByDir, kllByDir)
-            : (Map[String, Map[String, ColStat]],
-               Map[String, Map[String, String]],
-               Map[String, Map[String, String]]) = {
+        val statsByDir: Map[String, GenStats] = {
           val needs = ts.gens.filter(g =>
             missingStats(g).nonEmpty || missingNdv(g).nonEmpty ||
               missingKll(g).nonEmpty)
           if ((statFields.isEmpty && ndvCols.isEmpty && kllCols.isEmpty) ||
               needs.isEmpty)
-            (Map.empty, Map.empty, Map.empty)
+            Map.empty
           else {
-            val aggs = statFields.flatMap { case (c, _) =>
-              Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")) } ++
-              ndvCols.map { case (c, k) => ndvAgg(schema, c, k) } ++
-              kllCols.map(kllAggCol)
-            val grouped = spark.read.schema(schema)
+            val aggs = statsAggs(schema, statFields, ndvCols, kllCols)
+            spark.read.schema(schema)
               .parquet(needs.map(g => new File(root, g.path).toString): _*)
               .groupBy(regexp_replace(input_file_name(),
                 "/[^/]*$", "").as("__dir"))
@@ -5206,56 +5161,20 @@ object ManifestTable {
                 val dir = new File(
                   if (f.startsWith("file:")) new java.net.URI(f).getPath
                   else f).getCanonicalPath
-                dir -> r
-              }
-            val sb = grouped.map { case (dir, r) =>
-              dir -> statFields.flatMap {
-                case (c, "str") =>
-                  (r.getAs[Any](s"min_$c"), r.getAs[Any](s"max_$c")) match {
-                    case (lo: String, hi: String)
-                        if lo.length <= MaxStringStatLen &&
-                          hi.length <= MaxStringStatLen =>
-                      Some(c -> ColStat("str", lo, hi))
-                    case _ => None
-                  }
-                case (c, _) =>
-                  (statValue(r.getAs[Any](s"min_$c")),
-                    statValue(r.getAs[Any](s"max_$c"))) match {
-                    case (Some(lo), Some(hi)) => Some(c -> ColStat("num",
-                      lo.bigDecimal.toPlainString,
-                      hi.bigDecimal.toPlainString))
-                    case _ => None
-                  }
+                dir -> decodeStats(r, statFields, ndvCols, kllCols)
               }.toMap
-            }.toMap
-            val nb = grouped.map { case (dir, r) =>
-              dir -> ndvCols.flatMap { case (c, _) =>
-                ndvB64(r.getAs[Any](s"ndv_$c")).map(c -> _)
-              }.toMap
-            }.toMap
-            val kb = grouped.map { case (dir, r) =>
-              dir -> kllCols.flatMap(c =>
-                ndvB64(r.getAs[Any](s"kll_$c")).map(c -> _)).toMap
-            }.toMap
-            (sb, nb, kb)
           }
         }
-        // -- publish: same dirs, richer metadata; recorded layout adopts
-        //    the requested columns so future writers keep indexing --
+        // -- publish: same dirs, richer metadata (recorded entries win);
+        //    recorded layout adopts the requested columns so future
+        //    writers keep indexing --
         val rewritten = ts.buckets.map { case (b, gens) =>
           b -> gens.map { g =>
-            val k = dirKey(g)
-            g.copy(
-              stats = g.stats ++
-                statsByDir.getOrElse(k, Map.empty)
-                  .view.filterKeys(c => !g.stats.contains(c)).toMap,
+            val (st, nd, kl) = statsByDir.getOrElse[GenStats](dirKey(g),
+              (Map.empty, Map.empty, Map.empty))
+            g.copy(stats = st ++ g.stats,
               search = (g.search ++ missingSearch(g)).distinct,
-              ndv = g.ndv ++
-                ndvByDir.getOrElse(k, Map.empty)
-                  .view.filterKeys(c => !g.ndv.contains(c)).toMap,
-              kll = g.kll ++
-                kllByDir.getOrElse(k, Map.empty)
-                  .view.filterKeys(c => !g.kll.contains(c)).toMap)
+              ndv = nd ++ g.ndv, kll = kl ++ g.kll)
           }
         }
         val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten,
@@ -5393,7 +5312,7 @@ object ManifestTable {
             ts.schema.fieldNames.map(col).toIndexedSeq: _*), lit(spreadN))))
         val written = writeKeyedGens(spark, root, withB, BucketCol,
           ts.schema, (statsCols ++ ts.statsCols).distinct, ts.searchCols,
-          tmpRel = s"data/$table/rb${manifest.version + 1}-tmp-$nonce",
+          tmpRel = s"data/$table/stage-rb${manifest.version + 1}-w$nonce",
           relFor = b => s"data/$table/b$b-rb${manifest.version + 1}-$nonce",
           spread = spread)
         val rewritten = written.map { case (b, g) => b -> Seq(g) }.toMap
@@ -5447,20 +5366,23 @@ object ManifestTable {
       if (multi.isEmpty) return
       val nonce = newNonce()
       try {
+        // every bucket's folded generations rewrite in ONE keyed pass,
+        // each bucket into one generation
+        val fold = multi.toSeq.flatMap { case (b, gens) => smalls(gens).map(b -> _) }
+        val folded = fold.map(_._2.path).toSet
+        // physical rewrites carry the rewritten generations' indexing
+        // forward: a compacted bucket must not silently stop pruning
+        val written = writeKeyedGens(spark, root,
+          readKeyed(spark, root, ts.schema, fold, BucketCol), BucketCol,
+          ts.schema,
+          (statsCols ++ fold.flatMap { case (_, g) =>
+            g.stats.keys ++ g.ndv.keys ++ g.kll.keys }).distinct,
+          fold.flatMap(_._2.search).distinct,
+          tmpRel = s"data/$table/stage-c${manifest.version + 1}-w$nonce",
+          relFor = b => s"data/$table/b$b-c${manifest.version + 1}-$nonce")
+          .toMap
         val rewritten = multi.map { case (b, gens) =>
-          val fold = smalls(gens)
-          val keep = gens.filterNot(g => fold.exists(_.path == g.path))
-          val df = spark.read.schema(ts.schema)
-            .parquet(fold.map(g => new File(root, g.path).toString): _*)
-          val rel = s"data/$table/b$b-c${manifest.version + 1}-$nonce"
-          // physical rewrites carry the rewritten generations' indexing
-          // forward: a compacted bucket must not silently stop pruning
-          val (stats, nRows, searched, ndv, kll) = writeGen(df,
-            new File(root, rel),
-            (statsCols ++ fold.flatMap(_.ndv.keys) ++
-              fold.flatMap(_.kll.keys)).distinct,
-            fold.flatMap(_.search).distinct)
-          b -> (keep :+ BucketGen(rel, stats, nRows, searched, ndv, kll))
+          b -> (gens.filterNot(g => folded(g.path)) ++ written.get(b))
         }
         val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten,
           append = false,

@@ -431,8 +431,9 @@ class GraftReplaceDataWrite(op: GraftRowLevelOperation, schema: StructType)
   * the staging location is the table's own shared storage on a real
   * cluster). Deliberately NOT parquet: these bytes live only between the
   * write job and its commit, and the commit re-reads them exactly once
-  * to bucket + publish through [[ManifestTable.writeGen]] — the durable
-  * format with stats, sidecars, and compression happens there.
+  * to bucket + publish through [[ManifestTable.replaceGroups]] or
+  * [[ManifestTable.applyRowDeltas]] — the durable format with stats,
+  * sidecars, and compression happens there.
   */
 case class StagingWriterFactory(schema: StructType, stagingDir: String,
     conf: SerializableConfiguration) extends DataWriterFactory {

@@ -175,14 +175,14 @@ object CanonicalStream {
         val lines = CanonicalChain.linesFrom(surv).persist()
         pinned += lines
         val anoms = CanonicalChain.anomaliesFrom(surv, lines)
-        // every canonical id any row of a touched group maps to — a cheap
-        // row-local superset of {previously published ids} ∪ {new ids}
-        // (canonical_txn_id is a function of the row alone), so the
-        // replace-merge deletes exactly the groups being re-derived
-        val affected = allRows.select(
-          sha2(concat(col("client_id"), lit("|"),
-            coalesce(col("source_txn_id"), col("payload_hash"))), 256)
-            .as("canonical_txn_id")).distinct().persist()
+        // the ids the touched groups published before (their prior
+        // survivors') plus the ids they publish now, so the replace-merge
+        // deletes exactly the groups being re-derived. Not every row's id:
+        // a (client, NULL source id) group holds one id per document it
+        // ever received, but only its survivor's id was published
+        val ids = (surv +: oldTouched.map(Canonicalizer.survivors).toSeq)
+          .map(_.select("canonical_txn_id"))
+        val affected = ids.reduce(_ unionByName _).distinct().persist()
         pinned += affected
         Seq(
           // staging is replace-by-group too: the touched groups' stored

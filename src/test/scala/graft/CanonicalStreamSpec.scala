@@ -289,6 +289,84 @@ class CanonicalStreamSpec extends SparkSpec {
     assert(row.length == 1 && row.head.getAs[String]("source_txn_id") == "TXN990001")
   }
 
+  test("an increment to an id-less group rewrites only the buckets of its old and new survivor ids") {
+    val base = Files.createTempDirectory("graft_canidless")
+    val jsonDir = base.resolve("json"); val xmlDir = base.resolve("xml")
+    val csvDir = base.resolve("csv")
+    Seq(jsonDir, xmlDir, csvDir).foreach(Files.createDirectories(_))
+    val dirs = Map("JSON" -> jsonDir.toString, "XML" -> xmlDir.toString,
+      "CSV" -> csvDir.toString)
+    val root = new File(base.toFile, "table")
+    def land(name: String, docs: Seq[String], mtime: Long): Unit = {
+      val p = Paths.get(jsonDir.toString, name)
+      Files.write(p, docs.mkString("\n").getBytes("UTF-8"))
+      assert(p.toFile.setLastModified(mtime))
+    }
+    // documents WITHOUT a transaction id: client C9's whole history is
+    // one (C9, NULL) survivorship group whose only published id is its
+    // survivor's, sha2(client | payload hash)
+    val line = """"line_items":[{"line_number":"1","sku":"SKU1",""" +
+      """"quantity":"1","unit_price":"1.25","line_amount":"1.25"}]"""
+    def idless(i: Int): String =
+      s"""{"transaction_ts":"2024-01-${10 + i} 10:00:00","currency":"USD",""" +
+        s""""total_amount":${i + 1}.25,"customer_id":"CUST9",$line}"""
+    val t0 = 1700000000000L
+    // keyed documents of another client spread headers over every bucket
+    land("client_1_base.json", (0 until 24).map(i =>
+      s"""{"transaction_id":"TXN1$i","transaction_ts":"2024-01-02 10:00:00",""" +
+        s""""currency":"USD","total_amount":$i.50,"customer_id":"CUST1",""" +
+        s"""$line}"""), t0)
+    land("client_9_a.json", (0 until 3).map(idless), t0 + 1000L)
+    land("client_9_b.json", Seq(idless(3)), t0 + 2000L)
+    CanonicalStream.ingestIncrement(spark, dirs, root)
+
+    def c9Id(): String = {
+      val ids = CanonicalStream.canTxn(spark, root.toString)
+        .filter(col("client_id") === "C9").select("canonical_txn_id")
+        .collect().map(_.getString(0))
+      assert(ids.length == 1, s"C9 must publish exactly one survivor: ${ids.toSeq}")
+      ids.head
+    }
+    def bucketOf(id: String): Long = spark.range(1).select(
+      pmod(xxhash64(lit(id)), lit(CanonicalStream.Buckets))).head.getLong(0)
+    def hdrBuckets() = ManifestTable.read(root).get
+      .table(CanonicalStream.HeaderTable).buckets
+    val oldId = c9Id()
+    val before = hdrBuckets()
+
+    land("client_9_c.json", (4 until 7).map(idless), t0 + 3000L)
+    CanonicalStream.ingestIncrement(spark, dirs, root)
+    val newId = c9Id()
+    assert(newId != oldId)
+    val after = hdrBuckets()
+
+    // the stored grains still equal the one-shot batch chain
+    val (expHdr, expLine, expAnom) = batchChain(jsonDir, xmlDir, csvDir)
+    assert(canon(CanonicalStream.canTxn(spark, root.toString)) == canon(expHdr))
+    assert(canon(CanonicalStream.canTxnLine(spark, root.toString)) ==
+      canon(expLine))
+    assert(canon(CanonicalStream.canTxnAnomaly(spark, root.toString)) ==
+      canon(expAnom))
+
+    // the fixture is meaningful: the ids of C9's non-surviving documents
+    // hash to committed buckets beyond the two survivors' buckets
+    val survivorBuckets = Set(bucketOf(oldId), bucketOf(newId))
+    val allIds = ManifestTable.readTable(spark, root.toString,
+        table = CanonicalStream.StagingTable)
+      .filter(col("client_id") === "C9")
+      .select(sha2(concat(col("client_id"), lit("|"), col("payload_hash")), 256))
+      .collect().map(_.getString(0))
+    assert(allIds.length == 7)
+    assert(allIds.map(bucketOf).toSet.diff(survivorBuckets)
+      .exists(before.contains), "fixture covers no extra committed bucket")
+
+    // the commit rewrote exactly the old and new survivors' buckets
+    val changed = (before.keySet ++ after.keySet)
+      .filter(b => before.get(b) != after.get(b))
+    assert(changed == survivorBuckets,
+      s"changed can_txn buckets $changed, expected $survivorBuckets")
+  }
+
   test("ops views run as CDF-fed marts, equal to the batch aggregates after every incremental drop") {
     import graft.streaming.OpsMarts
     val base = Files.createTempDirectory("graft_opsmart")

@@ -327,6 +327,102 @@ class ManifestTableSpec extends SparkSpec {
     assert(tsAfter.gens.forall(_.stats.contains("ts")))
   }
 
+  test("every generation writer lands one parquet file per generation with exact recorded counts and bounds; a bucket a merge empties publishes none") {
+    val target = tmp("graft_layout")
+    val root = new File(target)
+    val t = ManifestTable.DefaultTable
+    val tracked = Seq("ts", "event_type", "value")
+    def bucketOf(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(4L))
+    // every live generation: exactly one parquet file, and the recorded
+    // row count and min/max bounds equal a recount from that file
+    def checkLayout(step: String): Unit = {
+      val ts = ManifestTable.read(root).get.table(t)
+      assert(ts.gens.nonEmpty)
+      ts.gens.foreach { g =>
+        val dir = new File(root, g.path)
+        val files = dir.listFiles.filter(_.getName.endsWith(".parquet"))
+        assert(files.length == 1,
+          s"$step: ${g.path} holds ${files.length} parquet files")
+        val df = spark.read.schema(ts.schema).parquet(dir.toString)
+        assert(g.rows == df.count(), s"$step: ${g.path} row count")
+        assert(tracked.forall(g.stats.contains), s"$step: ${g.path} stats")
+        val bounds = df.agg(
+          unix_micros(min("ts")), unix_micros(max("ts")),
+          min("event_type"), max("event_type"),
+          min("value"), max("value")).head
+        def num(v: Any) = BigDecimal(v.toString)
+        assert(num(g.stats("ts").lo) == num(bounds.get(0)) &&
+          num(g.stats("ts").hi) == num(bounds.get(1)), s"$step: ts bounds")
+        assert(g.stats("event_type").lo == bounds.getString(2) &&
+          g.stats("event_type").hi == bounds.getString(3),
+          s"$step: event_type bounds")
+        assert(num(g.stats("value").lo) == num(bounds.get(4)) &&
+          num(g.stats("value").hi) == num(bounds.get(5)), s"$step: value bounds")
+      }
+    }
+    def table() = ManifestTable.readTable(spark, target)
+
+    // a base merge into an empty table
+    ManifestTable.mergeBatch(root, "q", 0L, Seq(TableBatch(t,
+      rows(0 until 200, 1).repartition(5), Seq("event_id"), 4,
+      statsCols = tracked)))
+    checkLayout("base merge")
+    assert(table().count() == 200L)
+
+    // replace-by-key: the delete set is every key of bucket 2, the upsert
+    // rows update five keys elsewhere — bucket 2 is left with no rows
+    val emptied = 2L
+    val goneIds = table().filter(bucketOf(col("event_id")) === emptied)
+      .select("event_id").collect().map(_.getLong(0)).toSeq
+    val goneCount = goneIds.size.toLong
+    assert(goneCount > 0L)
+    val upd = rows(0 until 40, 9).filter(bucketOf(col("event_id")) =!= emptied)
+      .limit(5)
+    ManifestTable.mergeBatch(root, "q", 1L, Seq(TableBatch(t, upd,
+      Seq("event_id"), 4, statsCols = tracked,
+      deleteKeys = Some(goneIds.toDF("event_id")))))
+    checkLayout("replace-by-key merge")
+    val afterReplace = ManifestTable.read(root).get.table(t)
+    assert(afterReplace.buckets.get(emptied).forall(_.isEmpty),
+      "the emptied bucket still publishes a generation")
+    assert(table().count() == 200L - goneCount)
+    assert(table().filter(bucketOf(col("event_id")) === emptied).isEmpty)
+    assert(spark.read.format("graft").option("path", target).load()
+      .filter(col("event_id") === goneIds.head).isEmpty)
+    assert(table().filter(col("ts") >=
+      lit(java.sql.Timestamp.valueOf("2024-03-09 00:00:00"))).count() == 5L)
+
+    // two appends make multi-generation buckets; compaction folds each
+    // bucket into one generation
+    (0 until 2).foreach { i =>
+      ManifestTable.mergeBatch(root, "q", 2L + i, Seq(TableBatch(t,
+        rows(200 + i * 60 until 260 + i * 60, 3 + i).repartition(3),
+        Seq("event_id"), 4, statsCols = tracked, append = true)))
+    }
+    checkLayout("append")
+    val beforeCompact = table().collect().map(_.toString).toSet
+    ManifestTable.compact(spark, root)
+    checkLayout("compact")
+    val compacted = ManifestTable.read(root).get.table(t)
+    assert(compacted.buckets.values.forall(_.size <= 1))
+    assert(table().collect().map(_.toString).toSet == beforeCompact)
+
+    // predicate delete and update over several generations at once
+    val hit = col("event_id") % 10 === 3L
+    val matched = table().filter(hit).count()
+    assert(ManifestTable.deleteWhere(spark, root, hit) == matched)
+    checkLayout("deleteWhere")
+    assert(table().filter(hit).isEmpty)
+    val rest = table().count()
+    val upHit = col("event_id") % 10 === 5L
+    val upCount = table().filter(upHit).count()
+    assert(ManifestTable.updateWhere(spark, root, upHit,
+      Map("value" -> (col("value") + 1000.0))) == upCount)
+    checkLayout("updateWhere")
+    assert(table().count() == rest)
+    assert(table().filter(upHit && col("value") < 1000.0).isEmpty)
+  }
+
   test("deleteWhere removes matching rows atomically: untouched generations keep their dirs, the feed carries delete preimages, old snapshots still serve") {
     val target = tmp("graft_delete")
     val root = new File(target)

@@ -282,18 +282,21 @@ class RowLevelSpec extends SparkSpec {
     val wh = catalog("rl7")
     spark.sql("CREATE NAMESPACE IF NOT EXISTS rl7.ops")
     // searchCols turns on the parquet bloom filter for `sc` — the most
-    // aggressive in-file skipping path an equality DELETE can trigger
+    // aggressive in-file skipping path an equality DELETE can trigger.
+    // The block size is set under its Hadoop key: session confs reach the
+    // write job's Hadoop configuration verbatim (a `spark.hadoop.` prefix
+    // is only stripped from confs the SparkContext starts with)
     spark.sql("""CREATE TABLE rl7.ops.t (id BIGINT, sc STRING, pad STRING)
       USING graft TBLPROPERTIES ('mergeKeys'='id', 'buckets'='1',
         'searchCols'='sc')""")
-    val prevBlock = spark.conf.getOption("spark.hadoop.parquet.block.size")
-    spark.conf.set("spark.hadoop.parquet.block.size", "4096")
+    val prevBlock = spark.conf.getOption("parquet.block.size")
+    spark.conf.set("parquet.block.size", "4096")
     try {
       spark.sql("""INSERT INTO rl7.ops.t
         SELECT id, concat('k', id), repeat(uuid(), 4) FROM range(4000)""")
     } finally {
-      prevBlock.fold(spark.conf.unset("spark.hadoop.parquet.block.size"))(
-        v => spark.conf.set("spark.hadoop.parquet.block.size", v))
+      prevBlock.fold(spark.conf.unset("parquet.block.size"))(
+        v => spark.conf.set("parquet.block.size", v))
     }
     val root = new File(wh, "ops")
     // the premise: the single generation's file really has multiple row
