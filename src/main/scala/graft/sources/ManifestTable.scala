@@ -1000,118 +1000,97 @@ object ManifestTable {
     // the op marker pins WHICH branch head got published
     val marker = s"PUBLISH:$name@${branch.version}"
     def refuse(headV: Long, why: String): Nothing =
-      throw new ConcurrentCommitException(headV) {
-        override def getMessage: String =
-          s"branch '$name' forked at v$base but main is at v$headV " +
-            s"and $why — publish refused, NOTHING was published; " +
-            "re-create the branch from the new head and re-run its script"
+      throw new FinalConflict(headV, Some(
+        s"branch '$name' forked at v$base but main is at v$headV " +
+          s"and $why — publish refused, NOTHING was published; " +
+          "re-create the branch from the new head and re-run its script"))
+    // the loop reads and commits MAIN while the caller's session may
+    // still carry the branch conf
+    branchBypass.set(true)
+    val publishedV = try commitLoop(root, sweep = false) { head =>
+      // crash-recovery idempotency: publish is commit-then-drop, so a
+      // crash BETWEEN the two leaves the branch behind with main
+      // already past its base. If some commit since the fork carries
+      // THIS branch head's own marker (a same-named successor branch
+      // can't forge it — branchCreate refuses while this one lives,
+      // and any earlier same-name publish sits at a version ≤ this
+      // fork's base), the publish DID land: consume the branch and
+      // return that version. The marker's @<branchV> pin is what makes
+      // this safe — commits made to the still-live branch AFTER a
+      // crashed publish change branch.version, the marker no longer
+      // matches, and those commits are never silently dropped.
+      val ops = (base + 1 to head.version).map(v => v -> entryOp(root, v))
+      val landed = ops.collectFirst { case (v, Some(op)) if op == marker => v }
+      if (landed.isEmpty)
+        for ((v, Some(op)) <- ops if op.startsWith(s"PUBLISH:$name@"))
+          throw new IllegalStateException(
+            s"main v$v is '$op' but branch '$name' has advanced to " +
+              s"v${branch.version} since that publish landed — its " +
+              "post-publish commits were never published; re-create " +
+              "a branch from the new head and re-apply them")
+      landed match {
+        case Some(v) => Finish(v)
+        // audit-only branch: nothing to publish
+        case None if branch.version == base => Finish(base)
+        case None =>
+          // the branch's touched set, diffed against the FORK state (on
+          // the fast-forward path head IS the fork); includes branch-side
+          // drops
+          val fork =
+            if (head.version == base) head
+            else if (base == 0L) empty
+            else reconstruct(root, base).getOrElse(refuse(head.version,
+              s"the fork manifest v$base has aged out, so the branch's " +
+                "tables cannot be proven disjoint from main's later commits"))
+          val branchTouched = (branch.tables.keySet ++ fork.tables.keySet)
+            .toSeq.sorted
+            .filter(n => branch.tables.get(n) != fork.tables.get(n))
+          if (head.version > base) {
+            // disjoint-table rebase gate
+            val mainTouched = (base + 1 to head.version).flatMap { v =>
+              entryTouched(root, v).getOrElse(refuse(head.version,
+                s"main's v$v audit record is unavailable, so the branch's " +
+                  "tables cannot be proven disjoint from it"))
+            }.toSet
+            val overlap = branchTouched.filter(mainTouched)
+            if (overlap.nonEmpty) refuse(head.version,
+              s"tables [${overlap.mkString(", ")}] were modified by BOTH " +
+                "the branch and main since the fork")
+          }
+          val publishV = head.version + 1
+          val remapped = branch.tables.collect {
+            case (n, ts) if branchTouched.contains(n) =>
+              val (above, below) = ts.changes.partition(_.version > base)
+              val collapsed =
+                if (above.size < 2 || ts.mergeKeys.isEmpty)
+                  above.map(_.copy(version = publishV))
+                else netChanges(root, n, ts, above, publishV)
+              val feedFrom =
+                if (ts.feedFrom > publishV) publishV else ts.feedFrom
+              n -> ts.copy(changes = below ++ collapsed, feedFrom = feedFrom)
+          }
+          val droppedOnBranch = branchTouched.filterNot(branch.tables.contains)
+          // (queryId, lastBatch) is the SINGLE-SLOT replay watermark of the
+          // most recent batch commit — on main, every later commit already
+          // overwrites it, so the rebase keeps the HEAD's (main's last
+          // commit is the most recent on the published lineage), merging
+          // the batch floor when both sides advanced the SAME query; a
+          // fast-forward keeps the branch's, which IS the newest
+          val batch =
+            if (head.version == base) (branch.queryId, branch.lastBatch)
+            else if (head.queryId == branch.queryId)
+              (head.queryId, math.max(head.lastBatch, branch.lastBatch))
+            else (head.queryId, head.lastBatch)
+          // a concurrent main writer landing between the head read and
+          // the commit takes publishV: the loop re-reads and re-gates
+          Publish(marker, Swap(head.tables -- droppedOnBranch ++ remapped,
+            branchTouched, Some(batch)), publishV)
       }
-    var attempt = 0
-    while (true) {
-      val head = readDisk(root).getOrElse(empty)
-      if (head.version > base) {
-        // crash-recovery idempotency: publish is commit-then-drop, so a
-        // crash BETWEEN the two leaves the branch behind with main
-        // already past its base. If some commit since the fork carries
-        // THIS branch head's own marker (a same-named successor branch
-        // can't forge it — branchCreate refuses while this one lives,
-        // and any earlier same-name publish sits at a version ≤ this
-        // fork's base), the publish DID land: consume the branch and
-        // return that version. The marker's @<branchV> pin is what makes
-        // this safe — commits made to the still-live branch AFTER a
-        // crashed publish change branch.version, the marker no longer
-        // matches, and those commits are never silently dropped.
-        val ops = (base + 1 to head.version)
-          .map(v => v -> entryOp(root, v))
-        ops.collectFirst { case (v, Some(op)) if op == marker => v } match {
-          case Some(v) =>
-            branchDrop(root, name): Unit
-            gc(root, head)
-            return v
-          case None =>
-            for ((v, Some(op)) <- ops
-                 if op.startsWith(s"PUBLISH:$name@"))
-              throw new IllegalStateException(
-                s"main v$v is '$op' but branch '$name' has advanced to " +
-                  s"v${branch.version} since that publish landed — its " +
-                  "post-publish commits were never published; re-create " +
-                  "a branch from the new head and re-apply them")
-        }
-      }
-      if (branch.version == base) { // audit-only branch: nothing to publish
-        branchDrop(root, name): Unit
-        return base
-      }
-      // the branch's touched set, diffed against the FORK state (on the
-      // fast-forward path head IS the fork); includes branch-side drops
-      val fork =
-        if (head.version == base) head
-        else if (base == 0L) empty
-        else reconstruct(root, base).getOrElse(refuse(head.version,
-          s"the fork manifest v$base has aged out, so the branch's " +
-            "tables cannot be proven disjoint from main's later commits"))
-      val branchTouched = (branch.tables.keySet ++ fork.tables.keySet)
-        .toSeq.sorted
-        .filter(n => branch.tables.get(n) != fork.tables.get(n))
-      if (head.version > base) {
-        // disjoint-table rebase gate
-        val mainTouched = (base + 1 to head.version).flatMap { v =>
-          entryTouched(root, v).getOrElse(refuse(head.version,
-            s"main's v$v audit record is unavailable, so the branch's " +
-              "tables cannot be proven disjoint from it"))
-        }.toSet
-        val overlap = branchTouched.filter(mainTouched)
-        if (overlap.nonEmpty) refuse(head.version,
-          s"tables [${overlap.mkString(", ")}] were modified by BOTH " +
-            "the branch and main since the fork")
-      }
-      val publishV = head.version + 1
-      val remapped = branch.tables.collect {
-        case (n, ts) if branchTouched.contains(n) =>
-          val (above, below) = ts.changes.partition(_.version > base)
-          val collapsed =
-            if (above.size < 2 || ts.mergeKeys.isEmpty)
-              above.map(_.copy(version = publishV))
-            else netChanges(root, n, ts, above, publishV)
-          val feedFrom = if (ts.feedFrom > publishV) publishV else ts.feedFrom
-          n -> ts.copy(changes = below ++ collapsed, feedFrom = feedFrom)
-      }
-      val droppedOnBranch = branchTouched.filterNot(branch.tables.contains)
-      // (queryId, lastBatch) is the SINGLE-SLOT replay watermark of the
-      // most recent batch commit — on main, every later commit already
-      // overwrites it, so the rebase keeps the HEAD's (main's last commit
-      // is the most recent on the published lineage), merging the batch
-      // floor when both sides advanced the SAME query; a fast-forward
-      // keeps the branch's, which IS the newest
-      val (qid, lastBatch) =
-        if (head.version == base) (branch.queryId, branch.lastBatch)
-        else if (head.queryId == branch.queryId)
-          (head.queryId, math.max(head.lastBatch, branch.lastBatch))
-        else (head.queryId, head.lastBatch)
-      val published = Manifest(publishV, qid, lastBatch,
-        head.tables -- droppedOnBranch ++ remapped,
-        CommitInfo(marker, System.currentTimeMillis(), branchTouched))
-      // same read-commit race window as mergeBatch's: a concurrent main
-      // writer landing between the head read above and the link(2) CAS
-      // below loses us publishV — the injector lets tests force exactly
-      // that interleaving
-      commitFaultInjector(root, head.version)
-      branchBypass.set(true)
-      val won =
-        try { commit(root, published); true }
-        catch {
-          // another writer took publishV — re-read the head and re-gate
-          case _: ConcurrentCommitException
-              if attempt < MaxCommitAttempts - 1 =>
-            attempt += 1; false
-        } finally branchBypass.set(false)
-      if (won) {
-        branchDrop(root, name): Unit
-        gc(root, published)
-        return publishV
-      }
-    }
-    -1L
+    } finally branchBypass.set(false)
+    branchDrop(root, name): Unit
+    // an audit-only branch published nothing to sweep
+    if (publishedV != base) gc(root, readDisk(root).getOrElse(empty))
+    publishedV
   }
 
   /** Drop a branch: its unpublished data dirs orphan for the next main
@@ -1186,13 +1165,6 @@ object ManifestTable {
     base.version
   }
 
-  /** Publish the open transaction as ONE commit (base version + 1) and
-    * close it. Change-feed entries recorded at intermediate overlay
-    * versions remap to the published version, so CDF consumers see the
-    * envelope exactly as one commit. A concurrent external commit of
-    * the same version aborts the WHOLE envelope — nothing publishes —
-    * and the caller re-runs the script against the new state.
-    */
   /** The envelope's publishable snapshot — base.version + 1 with
     * change-feed entries remapped onto the single published version —
     * or None when no statement changed anything.
@@ -1280,15 +1252,18 @@ object ManifestTable {
           .as(ChangeTypeCol): _*)
       val netted = pre.unionByName(post)
       if (netted.isEmpty) Nil // every key's changes netted to zero
-      else {
-        val rel = s"data/$name/chg-v$publishV-txn" +
-          java.util.UUID.randomUUID.toString.take(8)
-        netted.write.mode("overwrite").parquet(new File(root, rel).toString)
-        Seq(ChangeGen(publishV, rel))
-      }
+      else Seq(ChangeGen(publishV, writeChanges(root,
+        s"data/$name/chg-v$publishV-txn${newNonce()}", netted)))
     } finally { all.unpersist(); () }
   }
 
+  /** Publish the open transaction as ONE commit (base version + 1) and
+    * close it. Change-feed entries recorded at intermediate overlay
+    * versions remap to the published version, so CDF consumers see the
+    * envelope exactly as one commit. A concurrent external commit of
+    * the same version aborts the WHOLE envelope — nothing publishes —
+    * and the caller re-runs the script against the new state.
+    */
   def commitTxn(root: File): Long = {
     val t = txns.remove(txnKey(root)).getOrElse(
       throw new IllegalStateException(s"no open transaction on $root"))
@@ -1602,7 +1577,7 @@ object ManifestTable {
       ts.searchCols == baseTs.searchCols &&
       ts.props == baseTs.props
     if (!layoutSame || changedBuckets(ts, baseTs).exists(footprint))
-      throw new ConcurrentCommitException(version)
+      throw new FinalConflict(version)
   }
 
   /** Can a race-losing [[mergeBatch]] attempt's staged update — derived
@@ -1749,6 +1724,15 @@ object ManifestTable {
     if (declared.isEmpty) CheckpointInterval else declared.min
   }
 
+  /** Every Nth commit writes a FULL snapshot version file (and refreshes
+    * the live pointer); the commits between write delta entries sized by
+    * what they touched. Commit cost therefore tracks the batch, not the
+    * table: a one-bucket merge on a 100k-generation table serializes one
+    * bucket's worth of JSON, with the full-snapshot cost amortized 1/N —
+    * the Delta log-compaction shape.
+    */
+  val CheckpointInterval = 10
+
   /** Publish with optimistic concurrency. The per-version manifest
     * (`.v{N}`) is created via an EXCLUSIVE hard link of a fully-written
     * tmp file — `link(2)` atomically fails with EEXIST if the version
@@ -1763,15 +1747,6 @@ object ManifestTable {
     * tmp names carry the writer's nonce so racing writers never scribble
     * on each other's tmp files.
     */
-  /** Every Nth commit writes a FULL snapshot version file (and refreshes
-    * the live pointer); the commits between write delta entries sized by
-    * what they touched. Commit cost therefore tracks the batch, not the
-    * table: a one-bucket merge on a 100k-generation table serializes one
-    * bucket's worth of JSON, with the full-snapshot cost amortized 1/N —
-    * the Delta log-compaction shape.
-    */
-  val CheckpointInterval = 10
-
   def commit(root: File, m: Manifest,
       delta: Option[CommitDelta] = None): Unit = {
     // inside a transaction the commit point is the OVERLAY, not the
@@ -1841,13 +1816,145 @@ object ManifestTable {
     }
   }
 
-  /** The delta entry for a commit produced by `advance(qid, batchId,
-    * updates, op)` — what the advance-shaped writers hand [[commit]].
+  // ---- the OCC commit loop: every verb reads the head manifest,
+  // derives its change against it, and publishes through ONE step;
+  // a lost race re-reads and re-derives ----
+
+  /** Commit-conflict retries: each retry re-reads the latest manifest and
+    * re-derives the change against it (a full rebase, not a blind
+    * re-send), so contending writers serialize correctly. Past the cap
+    * the conflict propagates — livelock under pathological contention
+    * fails loudly.
     */
-  private def deltaOf(next: Manifest, qid: String, batchId: Long,
-      updates: Map[String, TableUpdate], op: String): Option[CommitDelta] =
-    Some(CommitDelta(next.version, qid, batchId, op, next.info.timeMs,
-      updates))
+  val MaxCommitAttempts = 10
+
+  /** Test-only fault injection: called once per publish, after the
+    * attempt's dirs are written and just before its commit, with the
+    * attempt's base manifest version. A spec can move the manifest (a
+    * competing commit) and throw the exact failure shape a winner's GC
+    * inflicts on a loser's in-flight write, making the race-casualty
+    * classification deterministic instead of thread-timing-dependent.
+    * Production value: no-op.
+    */
+  private[graft] var commitFaultInjector: (File, Long) => Unit = (_, _) => ()
+
+  /** A conflict no rebase can cure — a row-level statement whose answer
+    * went stale, a refused branch publish: it surfaces on the attempt
+    * that found it instead of retrying.
+    */
+  private class FinalConflict(version: Long, why: Option[String] = None)
+      extends ConcurrentCommitException(version) {
+    override def getMessage: String = why.getOrElse(super.getMessage)
+  }
+
+  /** What one commit publishes onto its base manifest. */
+  private sealed trait Change
+
+  /** Per-table updates [[Manifest.advance]] folds in, committed as a delta
+    * entry (a full snapshot at checkpoint versions). `batch` is the
+    * (queryId, batchId) the commit records — by default the base's own,
+    * so a maintenance verb never moves a stream's replay watermark.
+    */
+  private case class Fold(updates: Map[String, TableUpdate],
+      batch: Option[(String, Long)] = None) extends Change
+
+  /** The whole next table map, committed as a full snapshot — the
+    * metadata verbs (create, clone, restore, view, drop, rename, branch
+    * publish) that replace table entries wholesale.
+    */
+  private case class Swap(tables: Map[String, TableState],
+      touched: Seq[String], batch: Option[(String, Long)] = None)
+      extends Change
+
+  /** One attempt's decision against its base manifest. */
+  private sealed trait Attempt[+A]
+
+  /** Commit nothing and return `value` (a no-op or an early exit). */
+  private case class Finish[+A](value: A) extends Attempt[A]
+
+  /** Publish `change` recorded as `op`, then return `value`. */
+  private case class Publish[+A](op: String, change: Change, value: A)
+      extends Attempt[A]
+
+  /** The publish step — the only place a next manifest is derived and
+    * committed: fold `change` onto `base` with `op` as its one recorded
+    * operation (full and delta entries alike), give the test hook its
+    * turn, then run the OCC [[commit]]. Returns the published manifest.
+    */
+  private def publish(root: File, base: Manifest, op: String,
+      change: Change): Manifest = {
+    val (next, delta) = change match {
+      case Fold(updates, batch) =>
+        val (qid, batchId) = batch.getOrElse((base.queryId, base.lastBatch))
+        val next = base.advance(qid, batchId, updates, op)
+        (next, Some(CommitDelta(next.version, qid, batchId, op,
+          next.info.timeMs, updates)))
+      case Swap(tables, touched, batch) =>
+        val (qid, lastBatch) = batch.getOrElse((base.queryId, base.lastBatch))
+        (Manifest(base.version + 1, qid, lastBatch, tables,
+          CommitInfo(op, System.currentTimeMillis(), touched)), None)
+    }
+    commitFaultInjector(root, base.version)
+    commit(root, next, delta)
+    next
+  }
+
+  /** The one retry rule, shared by [[commitLoop]] and [[mergeBatch]]: an
+    * attempt against `base` that failed with `e` retries when it lost the
+    * version race, or when it failed on a missing file ([[isFileRace]])
+    * while the manifest moved under it — a winner's GC collected its
+    * in-flight dirs. Anything else, a [[FinalConflict]], or the last of
+    * [[MaxCommitAttempts]] surfaces.
+    */
+  private def retryable(root: File, e: Throwable, tries: Int,
+      base: Manifest): Boolean =
+    tries < MaxCommitAttempts - 1 && (e match {
+      case _: FinalConflict => false
+      case _: ConcurrentCommitException => true
+      case _ => isFileRace(e) &&
+        read(root).map(_.version).getOrElse(0L) != base.version
+    })
+
+  /** The OCC loop every verb but [[mergeBatch]] commits through: run
+    * `prepare` (the copy-on-write verbs fold merge-on-read deltas there),
+    * read the head manifest, run `attempt` against it and publish what it
+    * decided; a [[retryable]] failure starts over from a fresh head. A
+    * published commit is swept by [[gc]] when `sweep` is set — outside
+    * the retry, so a sweep failure can never re-run a landed commit.
+    */
+  private def commitLoop[A](root: File, sweep: Boolean = true,
+      prepare: () => Unit = () => ())(attempt: Manifest => Attempt[A]): A = {
+    @scala.annotation.tailrec
+    def run(tries: Int): A = {
+      prepare()
+      val base = read(root).getOrElse(empty)
+      val outcome =
+        try Right(attempt(base) match {
+          case Finish(value) => (value, None)
+          case Publish(op, change, value) =>
+            (value, Some(publish(root, base, op, change)))
+        })
+        catch { case e: Throwable if retryable(root, e, tries, base) => Left(e) }
+      outcome match {
+        case Right((value, next)) =>
+          if (sweep) next.foreach(gc(root, _))
+          value
+        case Left(_) => run(tries + 1)
+      }
+    }
+    run(0)
+  }
+
+  /** Write one commit's change-feed rows as the dir `rel` — the single
+    * change-dir writer. The rebalance hint lets adaptive execution
+    * coalesce a small feed into one file while a large one still fans
+    * out, so a feed consumer opens few files per commit.
+    */
+  private def writeChanges(root: File, rel: String, rows: DataFrame): String = {
+    rows.hint("rebalance").write.mode("overwrite")
+      .parquet(new File(root, rel).toString)
+    rel
+  }
 
   /** Writer-attempt nonce: distinguishes concurrent writers' tmp files and
     * generation dirs (dashless so dir-name version parsing stays trivial).
@@ -2594,9 +2701,7 @@ object ManifestTable {
         val dirCache = scala.collection.mutable.HashMap.empty[String, String]
         it.foreach { r =>
           val f = r.getString(0)
-          val dir = dirCache.getOrElseUpdate(f, new File(
-            if (f.startsWith("file:")) new java.net.URI(f).getPath
-            else f).getParentFile.getCanonicalPath)
+          val dir = dirCache.getOrElseUpdate(f, genDirOf(f))
           var i = 0
           while (i < searchArr.length) {
             val c = searchArr(i)
@@ -2794,37 +2899,6 @@ object ManifestTable {
       .unionByName(latest.filter(col(RowOpCol) =!= "d")
         .select(schema.fieldNames.map(col).toIndexedSeq: _*))
   }
-
-  /** Multi-table idempotent merge-upsert of one micro-batch: every table's
-    * touched buckets are merged and written to NEW immutable generation
-    * dirs, then ALL tables publish with ONE atomic manifest swap — a crash
-    * anywhere before the swap leaves every table at the previous snapshot
-    * (no header-without-lines states), and replayed (queryId, batchId)
-    * pairs are exact no-ops. Per-batch cost scales with the batch's key
-    * spread across buckets, never with total table size.
-    *
-    * Schema evolution: each table's manifest schema unifies with the
-    * incoming batch's (new columns append); existing generation dirs are
-    * merged under the unified schema (missing columns null-backfill), so a
-    * column added mid-stream flows into the committed table without
-    * rewriting untouched buckets.
-    */
-  /** Commit-conflict retries: each retry re-reads the latest manifest and
-    * re-derives the merge against it (a full rebase, not a blind re-send),
-    * so contending writers serialize correctly. Past the cap the conflict
-    * propagates — livelock under pathological contention fails loudly.
-    */
-  val MaxCommitAttempts = 10
-
-  /** Test-only fault injection: called once per [[mergeBatch]] attempt,
-    * after the attempt's generation dirs are written but before its
-    * commit, with the attempt's base manifest version. A spec can move
-    * the manifest (a competing commit) and throw the exact failure shape
-    * a winner's GC inflicts on a loser's in-flight write, making the
-    * race-casualty classification deterministic instead of
-    * thread-timing-dependent. Production value: no-op.
-    */
-  private[graft] var commitFaultInjector: (File, Long) => Unit = (_, _) => ()
 
   // ---- bucket-level intent ledger (ADVISORY: correctness never depends
   // on it — the link(2) OCC commit still decides every version; intents
@@ -3045,6 +3119,24 @@ object ManifestTable {
     mergeBatch(root, qid, batchId, batches, adjust)
   }
 
+  /** Multi-table idempotent merge-upsert of one micro-batch: every table's
+    * touched buckets are merged and written to NEW immutable generation
+    * dirs, then ALL tables publish with ONE atomic manifest swap — a crash
+    * anywhere before the swap leaves every table at the previous snapshot
+    * (no header-without-lines states), and replayed (queryId, batchId)
+    * pairs are exact no-ops. Per-batch cost scales with the batch's key
+    * spread across buckets, never with total table size.
+    *
+    * Schema evolution: each table's manifest schema unifies with the
+    * incoming batch's (new columns append); existing generation dirs are
+    * merged under the unified schema (missing columns null-backfill), so a
+    * column added mid-stream flows into the committed table without
+    * rewriting untouched buckets.
+    *
+    * Its retry loop is its own (intent-ledger restarts, staged-update
+    * reuse across attempts) but retries on the shared [[retryable]] rule
+    * and commits through [[publish]].
+    */
   def mergeBatch(root: File, qid: String, batchId: Long,
       batches: Seq[TableBatch],
       // per-attempt batch rewrite against THAT attempt's manifest —
@@ -3123,7 +3215,6 @@ object ManifestTable {
           update.foreach(u => staged += tb.name -> ((prev, u)))
           update.map(tb.name -> _)
         }.toMap
-        commitFaultInjector(root, manifest.version)
         // an all-empty micro-batch (Spark does deliver them) must NOT
         // commit: a bucketless manifest helps no reader, and re-running
         // the empty batch is a harmless no-op, so skipping the lastBatch
@@ -3133,27 +3224,17 @@ object ManifestTable {
           if (batches.exists(_.overwrite)) "OVERWRITE"
           else if (batches.forall(_.append)) "APPEND"
           else "MERGE"
-        val next = manifest.advance(qid, batchId, updates, op)
-        commit(root, next, deltaOf(next, qid, batchId, updates, op))
-        committed = Some(next)
+        committed = Some(publish(root, manifest, op,
+          Fold(updates, Some((qid, batchId)))))
       } catch {
         case _: RestartAttempt if restarts < 10000 =>
           // an intent wait mid-attempt: nothing was derived for the
           // waiting table; re-read the manifest and go again without
           // burning an OCC retry (the wait itself is patience-bounded)
           restarts += 1
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          // lost the race: this attempt's generation dirs are orphans the
-          // winner's (or our eventual) GC collects; rebase and retry
-          attempt += 1
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          // a MISSING-FILE failure with the table moved under this attempt
-          // — a concurrent winner's GC may have collected our in-flight
-          // dirs MID-WRITE (this attempt was doomed to a commit conflict
-          // anyway); rebase and retry. Any other failure, or one with the
-          // manifest UNmoved, is a real error and rethrows.
+        case e: Throwable if retryable(root, e, attempt, manifest) =>
+          // lost the race, or a winner's GC collected this attempt's
+          // in-flight dirs: its dirs are orphans GC collects; rebase
           attempt += 1
       }
     }
@@ -3664,11 +3745,8 @@ object ManifestTable {
           // the commit's change-feed delta: one immutable dir per (table,
           // commit), written BEFORE the manifest swap like every data dir
           // — a crash leaves an orphan the next commit's GC removes
-          val changePath = changes.map { df =>
-            val rel = s"data/${tb.name}/chg-v$target-$nonce"
-            df.write.mode("overwrite").parquet(new File(root, rel).toString)
-            rel
-          }
+          val changePath = changes.map(
+            writeChanges(root, s"data/${tb.name}/chg-v$target-$nonce", _))
           // a merged bucket left with no rows publishes NO generation (its
           // old ones drop); append and overwrite buckets always hold rows
           Some(TableUpdate(unified.json,
@@ -3711,16 +3789,6 @@ object ManifestTable {
         .withColumn(ChangeTypeCol, lit("update_preimage")))
   }
 
-  /** The table's change feed for versions in `[fromVersion, toVersion]`
-    * (default: through the live version): every row a feed commit
-    * inserted, updated (postimage), or deleted (preimage), tagged
-    * `_change_type` + `_commit_version` — the incremental-consumption
-    * surface (Delta CDF shape). Asking for history older than the feed
-    * can serve COMPLETELY (never recorded, vacuumed past
-    * [[ChangeRetainVersions]], or broken by a non-feed commit) errors
-    * instead of silently returning a feed with holes — an incremental
-    * consumer fed a partial delta would diverge without noticing.
-    */
   /** Validated feed-delta selection for `[fromVersion, toVersion]` — the
     * shared gate both [[readChangeFeed]] and the streaming scans sit on:
     * completeness errors (no active feed, or a start before what the feed
@@ -3740,6 +3808,16 @@ object ManifestTable {
     (ts, ts.changes.filter(c => c.version >= fromVersion && c.version <= hi))
   }
 
+  /** The table's change feed for versions in `[fromVersion, toVersion]`
+    * (default: through the live version): every row a feed commit
+    * inserted, updated (postimage), or deleted (preimage), tagged
+    * `_change_type` + `_commit_version` — the incremental-consumption
+    * surface (Delta CDF shape). Asking for history older than the feed
+    * can serve COMPLETELY (never recorded, vacuumed past
+    * [[ChangeRetainVersions]], or broken by a non-feed commit) errors
+    * instead of silently returning a feed with holes — an incremental
+    * consumer fed a partial delta would diverge without noticing.
+    */
   def readChangeFeed(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Option[Long] = None,
       table: String = DefaultTable): DataFrame = {
@@ -3866,12 +3944,6 @@ object ManifestTable {
         ts.buckets.view.filterKeys(bucketIds).values.flatten.map(_.path).toSeq))
     }
 
-  /** Compact a table's multi-generation buckets back to one generation each
-    * — the micro-partition compaction that keeps append-mostly tables' file
-    * counts bounded. Concatenation only (append generations never contain
-    * conflicting merge keys — merges already rewrite); published as a
-    * normal atomic commit, readers never see a half-compacted table.
-    */
   /** DDL: publish an EMPTY table — schema and bucket layout, no data —
     * as an ordinary versioned commit, so `CREATE TABLE` is transactional,
     * OCC-serialized against concurrent writers, and visible in
@@ -3890,23 +3962,14 @@ object ManifestTable {
         StructType(schema.fields.map(f =>
           if (mergeKeys.contains(f.name)) f.copy(nullable = false) else f))
       else schema
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val manifest = read(root).getOrElse(empty)
+    // a key-less table records no bucket count (the rule advance applies)
+    val created = TableState(recorded.json, Map.empty, mergeKeys = mergeKeys,
+      numBuckets = if (mergeKeys.isEmpty) -1 else numBuckets,
+      statsCols = statsCols, searchCols = searchCols, props = props)
+    commitLoop(root, sweep = false) { manifest =>
       require(!manifest.tables.get(table).exists(_.schemaJson.nonEmpty),
         s"table '$table' already exists at $root")
-      try {
-        commit(root, manifest.advance(manifest.queryId, manifest.lastBatch,
-          Map(table -> TableUpdate(recorded.json, Map.empty, append = false,
-            mergeKeys = mergeKeys, numBuckets = numBuckets,
-            statsCols = statsCols, searchCols = searchCols,
-            props = props)), "CREATE"))
-        done = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
-      }
+      Publish("CREATE", Swap(manifest.tables + (table -> created), Seq(table)), ())
     }
   }
 
@@ -3930,11 +3993,8 @@ object ManifestTable {
       // string): updates the field's CURRENT_DEFAULT metadata — future
       // writes that omit the column fill with it; committed rows are
       // untouched (standard SQL SET DEFAULT semantics)
-      columnDefaults: Map[String, String] = Map.empty): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val manifest = read(root).getOrElse(empty)
+      columnDefaults: Map[String, String] = Map.empty): Unit =
+    commitLoop(root, sweep = false) { manifest =>
       val ts = manifest.table(table)
       require(ts.schemaJson.nonEmpty, s"table '$table' does not exist at $root")
       val schema = ts.schema
@@ -3969,21 +4029,10 @@ object ManifestTable {
       (statsCols ++ searchCols).foreach(c =>
         require(evolved.fieldNames.contains(c),
           s"layout column '$c' not in the table schema"))
-      try {
-        val updates = Map(table -> TableUpdate(evolved.json, Map.empty,
-          append = false, changePath = None, logicalChange = false,
-          statsCols = statsCols, searchCols = searchCols, props = props))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, "ALTER")
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, "ALTER"))
-        done = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
-      }
+      Publish("ALTER", Fold(Map(table -> TableUpdate(evolved.json, Map.empty,
+        append = false, changePath = None, logicalChange = false,
+        statsCols = statsCols, searchCols = searchCols, props = props))), ())
     }
-  }
 
   /** Zero-copy CLONE: register `target` as a new table whose state IS
     * `source`'s at `version` (default: current) — a pure-metadata commit
@@ -4003,33 +4052,19 @@ object ManifestTable {
     * starts feed-inactive.
     */
   def cloneTable(root: File, source: String, target: String,
-      version: Option[Long] = None): Long = {
-    var attempt = 0
-    while (true) {
-      val manifest = read(root).getOrElse(empty)
+      version: Option[Long] = None): Long =
+    commitLoop(root) { manifest =>
       val src = resolve(root, version).table(source)
       require(src.schemaJson.nonEmpty,
         s"table '$source' does not exist at $root" +
           version.fold("")(v => s" (version $v)"))
       require(!manifest.tables.get(target).exists(_.schemaJson.nonEmpty),
         s"table '$target' already exists at $root")
-      try {
-        val cloned = src.copy(changes = Nil, feedFrom = -1L)
-        val next = Manifest(manifest.version + 1, manifest.queryId,
-          manifest.lastBatch, manifest.tables + (target -> cloned),
-          CommitInfo(
-            s"CLONE:$source@v${version.getOrElse(manifest.version)}",
-            System.currentTimeMillis(), Seq(target)))
-        commit(root, next)
-        gc(root, next)
-        return next.version
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
-      }
+      val cloned = src.copy(changes = Nil, feedFrom = -1L)
+      Publish(s"CLONE:$source@v${version.getOrElse(manifest.version)}",
+        Swap(manifest.tables + (target -> cloned), Seq(target)),
+        manifest.version + 1)
     }
-    -1L
-  }
 
   /** CROSS-ROOT zero-copy CLONE: register `target` in `targetRoot` as a
     * new table whose state IS `source`'s at `version` in `sourceRoot` —
@@ -4059,13 +4094,13 @@ object ManifestTable {
       s"table '$source' does not exist at $sourceRoot" +
         version.fold("")(v => s" (version $v)"))
     Files.createDirectories(targetRoot.toPath)
-    var attempt = 0
-    while (true) {
-      val manifest = read(targetRoot).getOrElse(empty)
+    // the linked dirs are named for the attempt's version: a lost race
+    // leaves them orphans the target root's GC collects once decided
+    commitLoop(targetRoot) { manifest =>
       require(!manifest.tables.get(target).exists(_.schemaJson.nonEmpty),
         s"table '$target' already exists at $targetRoot")
       val newV = manifest.version + 1
-      val nonce = java.util.UUID.randomUUID.toString.take(8)
+      val nonce = newNonce()
       var n = 0
       def link(gen: BucketGen, bucket: Long, kind: String): BucketGen = {
         n += 1
@@ -4082,24 +4117,10 @@ object ManifestTable {
       }
       val cloned = src.copy(buckets = buckets, deltas = deltas,
         changes = Nil, feedFrom = -1L)
-      try {
-        val next = Manifest(newV, manifest.queryId, manifest.lastBatch,
-          manifest.tables + (target -> cloned),
-          CommitInfo(
-            s"CLONE:$sourceRoot/$source@v${
-              version.getOrElse(resolve(sourceRoot, None).version)}",
-            System.currentTimeMillis(), Seq(target)))
-        commit(targetRoot, next)
-        gc(targetRoot, next)
-        return next.version
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          // the linked dirs are named for the lost version: orphans the
-          // target root's GC collects once that version slot is decided
-          attempt += 1
-      }
+      Publish(s"CLONE:$sourceRoot/$source@v${
+          version.getOrElse(resolve(sourceRoot, None).version)}",
+        Swap(manifest.tables + (target -> cloned), Seq(target)), newV)
     }
-    -1L
   }
 
   /** Recursively hard-link `src`'s files under `dst` (directories are
@@ -4131,80 +4152,61 @@ object ManifestTable {
     * ill-posed. Returns the new version (no-op when already identical).
     */
   def restoreTable(spark: SparkSession, root: File, table: String,
-      version: Long): Long = {
-    var attempt = 0
-    while (true) {
-      val manifest = read(root).getOrElse(empty)
+      version: Long): Long =
+    commitLoop(root) { manifest =>
       val target = resolve(root, Some(version)).table(table)
       require(target.schemaJson.nonEmpty,
         s"table '$table' does not exist at version $version")
       val cur = manifest.table(table)
-      if (cur == target) return manifest.version // already that state
-      val newV = manifest.version + 1
-      val nonce = newNonce()
-      val (changes, feedFrom) =
-        if (cur.feedFrom < 0 || cur.schemaJson.isEmpty) (Nil, -1L)
-        else if (cur.schemaJson != target.schemaJson ||
-            cur.mergeKeys.isEmpty || cur.mergeKeys != target.mergeKeys)
-          (Nil, -1L) // diff ill-posed: reset (subscribers fail loudly)
-        else {
-          val keys = cur.mergeKeys
-          def snap(ts: TableState): DataFrame = reconcileDeltas(spark,
-            root.toString, ts,
-            readDirs(spark, root.toString, ts, ts.gens.map(_.path)))
-          val o = snap(cur).persist()
-          val n = snap(target).persist()
-          try {
-            val changed = o.exceptAll(n).unionAll(n.exceptAll(o))
-              .select(keys.map(col).toIndexedSeq: _*).distinct().persist()
+      if (cur == target) Finish(manifest.version) // already that state
+      else {
+        val newV = manifest.version + 1
+        val (changes, feedFrom) =
+          if (cur.feedFrom < 0 || cur.schemaJson.isEmpty) (Nil, -1L)
+          else if (cur.schemaJson != target.schemaJson ||
+              cur.mergeKeys.isEmpty || cur.mergeKeys != target.mergeKeys)
+            (Nil, -1L) // diff ill-posed: reset (subscribers fail loudly)
+          else {
+            val keys = cur.mergeKeys
+            def snap(ts: TableState): DataFrame = reconcileDeltas(spark,
+              root.toString, ts,
+              readDirs(spark, root.toString, ts, ts.gens.map(_.path)))
+            val o = snap(cur).persist()
+            val n = snap(target).persist()
             try {
-              if (changed.isEmpty) (cur.changes, cur.feedFrom)
-              else {
-                val oKeys = o.select(keys.map(col).toIndexedSeq: _*).distinct()
-                val nKeys = n.select(keys.map(col).toIndexedSeq: _*).distinct()
-                def keyCond(l: DataFrame, r: DataFrame) =
-                  keys.map(k => l(k) <=> r(k)).reduce(_ && _)
-                val oCh = o.join(changed, keyCond(o, changed), "left_semi")
-                val nCh = n.join(changed, keyCond(n, changed), "left_semi")
-                val pre = oCh.join(nKeys, keyCond(oCh, nKeys), "left_semi")
-                  .withColumn(ChangeTypeCol, lit("update_preimage"))
-                val del = oCh.join(nKeys, keyCond(oCh, nKeys), "left_anti")
-                  .withColumn(ChangeTypeCol, lit("delete"))
-                val post = nCh.join(oKeys, keyCond(nCh, oKeys), "left_semi")
-                  .withColumn(ChangeTypeCol, lit("update_postimage"))
-                val ins = nCh.join(oKeys, keyCond(nCh, oKeys), "left_anti")
-                  .withColumn(ChangeTypeCol, lit("insert"))
-                val rel = s"data/$table/chg-v$newV-rst$nonce"
-                pre.unionByName(del).unionByName(post).unionByName(ins)
-                  .write.mode("overwrite")
-                  .parquet(new File(root, rel).toString)
-                (cur.changes :+ ChangeGen(newV, rel), cur.feedFrom)
-              }
-            } finally { changed.unpersist(); () }
-          } finally { o.unpersist(); n.unpersist(); () }
-        }
-      try {
+              val changed = o.exceptAll(n).unionAll(n.exceptAll(o))
+                .select(keys.map(col).toIndexedSeq: _*).distinct().persist()
+              try {
+                if (changed.isEmpty) (cur.changes, cur.feedFrom)
+                else {
+                  val oKeys = o.select(keys.map(col).toIndexedSeq: _*).distinct()
+                  val nKeys = n.select(keys.map(col).toIndexedSeq: _*).distinct()
+                  def keyCond(l: DataFrame, r: DataFrame) =
+                    keys.map(k => l(k) <=> r(k)).reduce(_ && _)
+                  val oCh = o.join(changed, keyCond(o, changed), "left_semi")
+                  val nCh = n.join(changed, keyCond(n, changed), "left_semi")
+                  val pre = oCh.join(nKeys, keyCond(oCh, nKeys), "left_semi")
+                    .withColumn(ChangeTypeCol, lit("update_preimage"))
+                  val del = oCh.join(nKeys, keyCond(oCh, nKeys), "left_anti")
+                    .withColumn(ChangeTypeCol, lit("delete"))
+                  val post = nCh.join(oKeys, keyCond(nCh, oKeys), "left_semi")
+                    .withColumn(ChangeTypeCol, lit("update_postimage"))
+                  val ins = nCh.join(oKeys, keyCond(nCh, oKeys), "left_anti")
+                    .withColumn(ChangeTypeCol, lit("insert"))
+                  val rel = writeChanges(root,
+                    s"data/$table/chg-v$newV-rst${newNonce()}",
+                    pre.unionByName(del).unionByName(post).unionByName(ins))
+                  (cur.changes :+ ChangeGen(newV, rel), cur.feedFrom)
+                }
+              } finally { changed.unpersist(); () }
+            } finally { o.unpersist(); n.unpersist(); () }
+          }
         val restored = target.copy(changes = changes, feedFrom = feedFrom)
-        val next = Manifest(newV, manifest.queryId, manifest.lastBatch,
-          manifest.tables + (table -> restored),
-          CommitInfo(s"RESTORE:$table@v$version",
-            System.currentTimeMillis(), Seq(table)))
-        commit(root, next)
-        gc(root, next)
-        return next.version
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
+        Publish(s"RESTORE:$table@v$version",
+          Swap(manifest.tables + (table -> restored), Seq(table)), newV)
       }
     }
-    -1L
-  }
 
-  /** DDL: drop a table from the root's catalog — a versioned commit; the
-    * dropped generations stay readable through retained older snapshots
-    * and GC collects them as those age out. Returns false when the table
-    * doesn't exist.
-    */
   // ---- named views ----
 
   /** Marker prop: a manifest entry carrying `viewSql` is a NAMED VIEW —
@@ -4229,10 +4231,7 @@ object ManifestTable {
       orReplace: Boolean, props: Map[String, String] = Map.empty): Unit = {
     require(sql.trim.nonEmpty, s"view '$name' needs a SQL definition")
     root.mkdirs()
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val manifest = read(root).getOrElse(empty)
+    commitLoop(root, sweep = false) { manifest =>
       val existing = manifest.tables.get(name)
       require(!existing.exists(ts => !isView(ts)),
         s"'$name' is a TABLE at $root — DROP TABLE it first or pick " +
@@ -4244,15 +4243,8 @@ object ManifestTable {
         schemaJson = new org.apache.spark.sql.types.StructType().json,
         buckets = Map.empty,
         props = props + (ViewSqlKey -> sql))
-      val next = Manifest(manifest.version + 1, manifest.queryId,
-        manifest.lastBatch, manifest.tables + (name -> entry),
-        CommitInfo(if (existing.isDefined) "REPLACE VIEW" else "CREATE VIEW",
-          System.currentTimeMillis(), Seq(name)))
-      try { commit(root, next); done = true }
-      catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
-      }
+      Publish(if (existing.isDefined) "REPLACE VIEW" else "CREATE VIEW",
+        Swap(manifest.tables + (name -> entry), Seq(name)), ())
     }
   }
 
@@ -4274,51 +4266,31 @@ object ManifestTable {
   def viewSql(root: File, name: String): Option[String] =
     read(root).flatMap(_.tables.get(name)).flatMap(_.props.get(ViewSqlKey))
 
-  def dropTable(root: File, table: String): Boolean = {
-    var attempt = 0
-    while (true) {
-      val manifest = read(root).getOrElse(empty)
+  /** DDL: drop a table from the root's catalog — a versioned commit; the
+    * dropped generations stay readable through retained older snapshots
+    * and GC collects them as those age out. Returns false when the table
+    * doesn't exist.
+    */
+  def dropTable(root: File, table: String): Boolean =
+    commitLoop(root) { manifest =>
       if (!manifest.tables.get(table).exists(_.schemaJson.nonEmpty))
-        return false
-      try {
-        val next = Manifest(manifest.version + 1, manifest.queryId,
-          manifest.lastBatch, manifest.tables - table,
-          CommitInfo("DROP", System.currentTimeMillis(), Seq(table)))
-        commit(root, next)
-        gc(root, next)
-        return true
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
-      }
+        Finish(false)
+      else Publish("DROP", Swap(manifest.tables - table, Seq(table)), true)
     }
-    false
-  }
 
   /** DDL: rename a table within its root — pure metadata (generation dirs
     * are opaque recorded paths, so no data moves), one versioned commit.
     */
-  def renameTable(root: File, from: String, to: String): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val manifest = read(root).getOrElse(empty)
+  def renameTable(root: File, from: String, to: String): Unit =
+    commitLoop(root, sweep = false) { manifest =>
       val ts = manifest.tables.get(from).filter(_.schemaJson.nonEmpty)
         .getOrElse(throw new IllegalStateException(
           s"table '$from' does not exist at $root"))
       require(!manifest.tables.get(to).exists(_.schemaJson.nonEmpty),
         s"table '$to' already exists at $root")
-      try {
-        commit(root, Manifest(manifest.version + 1, manifest.queryId,
-          manifest.lastBatch, manifest.tables - from + (to -> ts),
-          CommitInfo("RENAME", System.currentTimeMillis(), Seq(from, to))))
-        done = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
-      }
+      Publish("RENAME",
+        Swap(manifest.tables - from + (to -> ts), Seq(from, to)), ())
     }
-  }
 
   /** Commit history over the RETAINED version files (the DESCRIBE
     * HISTORY / QUERY_HISTORY surface): one row per time-travelable
@@ -4478,75 +4450,66 @@ object ManifestTable {
     */
   def deleteWhere(spark: SparkSession, root: File,
       cond: org.apache.spark.sql.Column, table: String = DefaultTable): Long = {
-    var attempt = 0
-    var result = -1L
-    while (result < 0) {
-      collapseDeltas(spark, root, table): Unit // CoW rewrite reads base bytes
-      val manifest = read(root).getOrElse(empty)
+    // the CoW rewrite reads base bytes: fold merge-on-read deltas first
+    val collapse = () => collapseDeltas(spark, root, table): Unit
+    commitLoop(root, prepare = collapse) { manifest =>
       val ts = manifest.table(table)
-      if (ts.schemaJson.isEmpty) return 0L
-      val nonce = newNonce()
-      try {
-        // discovery: matched count + the files holding matches, one job,
-        // pruned by the manifest algebra through the provider read path.
-        // Aggregated PER FILE (distributed hash agg, map-side partial —
-        // each task holds at most its own files' keys) rather than a
-        // collect_set funneling every path through ONE reducer's buffer:
-        // a broad delete at 100 TB can touch millions of files, and the
-        // driver result is one small row per file either way
-        val pruned = spark.read.format("graft")
+      val (matched, touched) =
+        if (ts.schemaJson.isEmpty) (0L, (_: BucketGen) => false)
+        else matchedGens(root, spark.read.format("graft")
           .option("path", root.toString).option("table", table)
           .option("version", manifest.version.toString).load()
-          .filter(cond)
-        val fileRows = pruned
-          .select(input_file_name().as("f")) // projected first: aggregates
-          .groupBy(col("f"))                 // reject nondeterministic args
-          .agg(count(lit(1)).as("n"))
-          .collect()
-        val matched = fileRows.iterator.map(_.getAs[Long]("n")).sum
-        if (matched == 0L) return 0L
-        val touchedDirs: Set[String] = fileRows.map { r =>
-          val f = r.getAs[String]("f")
-          val p = if (f.startsWith("file:")) new File(new java.net.URI(f))
-            else new File(f)
-          p.getParentFile.getCanonicalPath
-        }.toSet
-        def touched(g: BucketGen): Boolean =
-          touchedDirs.contains(new File(root, g.path).getCanonicalPath)
+          .filter(cond))
+      if (matched == 0L) Finish(0L)
+      else {
+        val nonce = newNonce()
         // an emptied generation drops; its dir orphans into GC
         val rewritten = rewriteGens(spark, root, table, ts, touched, "d",
           manifest.version + 1, nonce)(_.filter(!coalesce(cond, lit(false))))
         // active feed: the deleted rows ARE this commit's delta
         val changePath =
           if (ts.feedFrom < 0) None
-          else {
-            val rel = s"data/$table/chg-d${manifest.version + 1}-$nonce"
+          else Some(writeChanges(root,
+            s"data/$table/chg-d${manifest.version + 1}-$nonce",
             spark.read.schema(ts.schema)
               .parquet(ts.gens.filter(touched)
                 .map(g => new File(root, g.path).toString): _*)
-              .filter(cond).withColumn(ChangeTypeCol, lit("delete"))
-              .write.mode("overwrite").parquet(new File(root, rel).toString)
-            Some(rel)
-          }
-        val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten.toMap,
-          append = false, changePath = changePath))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, "DELETE")
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, "DELETE"))
-        gc(root, next)
-        result = matched
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1 // rebase on the interleaved commit and re-derive
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1 // same race-casualty rule as mergeBatch
+              .filter(cond).withColumn(ChangeTypeCol, lit("delete"))))
+        Publish("DELETE", Fold(Map(table -> TableUpdate(ts.schemaJson,
+          rewritten, append = false, changePath = changePath))), matched)
       }
     }
-    result
   }
+
+  /** Match discovery for [[deleteWhere]]/[[updateWhere]] over `matching`
+    * — the rows matching the predicate, read through the
+    * `format("graft")` surface so manifest stats/bucket/sidecar pruning
+    * applies before any file opens, and parquet pushdown skips row groups
+    * inside them. One job counts the matches PER FILE (distributed hash
+    * agg, map-side partial — each task holds at most its own files' keys)
+    * rather than a collect_set funneling every path through ONE reducer's
+    * buffer: a broad delete at 100 TB can touch millions of files, and the
+    * driver result is one small row per file either way. Returns the
+    * match count and which generations hold a match.
+    */
+  private def matchedGens(root: File, matching: DataFrame)
+      : (Long, BucketGen => Boolean) = {
+    val fileRows = matching
+      .select(input_file_name().as("f")) // projected first: aggregates
+      .groupBy(col("f"))                 // reject nondeterministic args
+      .agg(count(lit(1)).as("n"))
+      .collect()
+    val dirs = fileRows.map(r => genDirOf(r.getAs[String]("f"))).toSet
+    (fileRows.iterator.map(_.getAs[Long]("n")).sum,
+      g => dirs.contains(new File(root, g.path).getCanonicalPath))
+  }
+
+  /** The canonical generation dir holding data file `f` — a path or a
+    * `file:` URI, as `input_file_name()` and scans report it.
+    */
+  private def genDirOf(f: String): String =
+    new File(if (f.startsWith("file:")) new java.net.URI(f).getPath else f)
+      .getParentFile.getCanonicalPath
 
   /** Predicate update (`UPDATE t SET … WHERE …`): rewrite every matching
     * row with the SET expressions, touching only the generations that
@@ -4567,90 +4530,61 @@ object ManifestTable {
       sets: Map[String, org.apache.spark.sql.Column],
       table: String = DefaultTable): Long = {
     require(sets.nonEmpty, "updateWhere needs at least one SET column")
-    var attempt = 0
-    var result = -1L
-    while (result < 0) {
-      collapseDeltas(spark, root, table): Unit // CoW rewrite reads base bytes
-      val manifest = read(root).getOrElse(empty)
+    // the CoW rewrite reads base bytes: fold merge-on-read deltas first
+    val collapse = () => collapseDeltas(spark, root, table): Unit
+    commitLoop(root, prepare = collapse) { manifest =>
       val ts = manifest.table(table)
-      if (ts.schemaJson.isEmpty) return 0L
-      val schema = ts.schema
-      sets.keys.foreach { c =>
-        require(schema.fieldNames.contains(c), s"SET column '$c' not in schema")
-        require(!ts.mergeKeys.contains(c),
-          s"SET column '$c' is a merge key: a key-changing update is a " +
-            "delete+insert (use mergeBatch with deleteKeys)")
-      }
-      val nonce = newNonce()
-      try {
+      if (ts.schemaJson.isEmpty) Finish(0L)
+      else {
+        val schema = ts.schema
+        sets.keys.foreach { c =>
+          require(schema.fieldNames.contains(c), s"SET column '$c' not in schema")
+          require(!ts.mergeKeys.contains(c),
+            s"SET column '$c' is a merge key: a key-changing update is a " +
+              "delete+insert (use mergeBatch with deleteKeys)")
+        }
         val pruned = spark.read.format("graft")
           .option("path", root.toString).option("table", table)
           .option("version", manifest.version.toString).load()
           .filter(cond)
-        // per-file distributed aggregation, not a one-reducer collect_set
-        // — same discovery contract as deleteWhere
-        val fileRows = pruned
-          .select(input_file_name().as("f"))
-          .groupBy(col("f")).agg(count(lit(1)).as("n"))
-          .collect()
-        val matched = fileRows.iterator.map(_.getAs[Long]("n")).sum
-        if (matched == 0L) return 0L
-        val touchedDirs: Set[String] = fileRows.map { r =>
-          val f = r.getAs[String]("f")
-          val p = if (f.startsWith("file:")) new File(new java.net.URI(f))
-            else new File(f)
-          p.getParentFile.getCanonicalPath
-        }.toSet
-        def touched(g: BucketGen): Boolean =
-          touchedDirs.contains(new File(root, g.path).getCanonicalPath)
-        val hit = coalesce(cond, lit(false))
-        // columns outside the SET list pass through (a rewrite's key
-        // column included)
-        def applySets(df: DataFrame): DataFrame =
-          // generated columns RE-DERIVE from the post-SET row, so an
-          // update to a referenced column cannot leave them stale
-          applyGenerated(table, ts.props, schema, df.select(
-            df.columns.map { c =>
-              sets.get(c).fold(col(c))(e =>
-                when(hit, e.cast(schema(c).dataType)).otherwise(col(c)).as(c))
-            }.toIndexedSeq: _*))
-        // CHECK constraints gate the post-update images of the matched
-        // rows before any generation rewrites
-        enforceConstraints(table, ts.props, applySets(pruned))
-        val rewritten = rewriteGens(spark, root, table, ts, touched, "u",
-          manifest.version + 1, nonce)(applySets)
-        val changePath =
-          if (ts.feedFrom < 0) None
-          else {
-            val rel = s"data/$table/chg-u${manifest.version + 1}-$nonce"
-            val matchedRows = spark.read.schema(schema)
-              .parquet(ts.gens.filter(touched)
-                .map(g => new File(root, g.path).toString): _*)
-              .filter(cond)
-            matchedRows.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(applySets(matchedRows)
-                .withColumn(ChangeTypeCol, lit("update_postimage")))
-              .write.mode("overwrite").parquet(new File(root, rel).toString)
-            Some(rel)
-          }
-        val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten.toMap,
-          append = false, changePath = changePath))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, "UPDATE")
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, "UPDATE"))
-        gc(root, next)
-        result = matched
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1 // same race-casualty rule as mergeBatch
+        val (matched, touched) = matchedGens(root, pruned)
+        if (matched == 0L) Finish(0L)
+        else {
+          val hit = coalesce(cond, lit(false))
+          // columns outside the SET list pass through (a rewrite's key
+          // column included)
+          def applySets(df: DataFrame): DataFrame =
+            // generated columns RE-DERIVE from the post-SET row, so an
+            // update to a referenced column cannot leave them stale
+            applyGenerated(table, ts.props, schema, df.select(
+              df.columns.map { c =>
+                sets.get(c).fold(col(c))(e =>
+                  when(hit, e.cast(schema(c).dataType)).otherwise(col(c)).as(c))
+              }.toIndexedSeq: _*))
+          // CHECK constraints gate the post-update images of the matched
+          // rows before any generation rewrites
+          enforceConstraints(table, ts.props, applySets(pruned))
+          val nonce = newNonce()
+          val rewritten = rewriteGens(spark, root, table, ts, touched, "u",
+            manifest.version + 1, nonce)(applySets)
+          val changePath =
+            if (ts.feedFrom < 0) None
+            else {
+              val matchedRows = spark.read.schema(schema)
+                .parquet(ts.gens.filter(touched)
+                  .map(g => new File(root, g.path).toString): _*)
+                .filter(cond)
+              Some(writeChanges(root,
+                s"data/$table/chg-u${manifest.version + 1}-$nonce",
+                matchedRows.withColumn(ChangeTypeCol, lit("update_preimage"))
+                  .unionByName(applySets(matchedRows)
+                    .withColumn(ChangeTypeCol, lit("update_postimage")))))
+            }
+          Publish("UPDATE", Fold(Map(table -> TableUpdate(ts.schemaJson,
+            rewritten, append = false, changePath = changePath))), matched)
+        }
       }
     }
-    result
   }
 
   /** Group-replacement commit for the native SQL row-level operations
@@ -4689,25 +4623,10 @@ object ManifestTable {
   def replaceGroups(spark: SparkSession, root: File, table: String,
       replacedFiles: Seq[String], rows: DataFrame, op: String,
       baseVersion: Long): Unit = {
-    val replacedDirs: Set[String] = replacedFiles.map { f =>
-      val p = if (f.startsWith("file:")) new File(new java.net.URI(f))
-        else new File(f)
-      p.getParentFile.getCanonicalPath
-    }.toSet
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val manifest = read(root).getOrElse(empty)
-      val baseTs = resolve(root, Some(baseVersion)).table(table)
-      val ts = manifest.table(table)
-      val moved = ts != baseTs
-      if (moved && !ts.props.get("isolationLevel").contains("snapshot"))
-        // serializable (default): ANY same-table change under the
-        // statement stales its answer
-        throw new ConcurrentCommitException(manifest.version)
-      if (moved) // snapshot: a LAYOUT change is never rebasable — gate
-        checkSnapshotRebase(ts, baseTs, Set.empty, manifest.version)
-      require(ts.schemaJson.nonEmpty, s"table '$table' does not exist")
+    val replacedDirs: Set[String] = replacedFiles.map(genDirOf).toSet
+    commitLoop(root) { manifest =>
+      val (ts, baseTs, moved) =
+        statementTable(root, manifest, table, baseVersion)
       // a group replacement drops scanned FILES wholesale; outstanding
       // merge-on-read deltas are not files the scan planned, so the
       // rewrite would silently resurrect superseded rows. Reachable only
@@ -4769,26 +4688,30 @@ object ManifestTable {
           if (ts.feedFrom < 0) None
           else replaceDelta(spark, root, table, ts, replacedDirs, aligned,
             manifest.version + 1, nonce)
-        val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten,
-          append = false, changePath = changePath, props = hwmProps))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, op)
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, op))
-        gc(root, next)
-        done = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1 // loop re-checks: other-table commits rebase,
-                       // same-table commits abort above
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1 // same race-casualty rule as mergeBatch
+        Publish(op, Fold(Map(table -> TableUpdate(ts.schemaJson, rewritten,
+          append = false, changePath = changePath, props = hwmProps))), ())
       } finally {
         withBucket.unpersist(); idPersisted.foreach(_.unpersist()); ()
       }
     }
+  }
+
+  /** A row-level statement's table at the attempt's `manifest` and at
+    * the snapshot `baseVersion` its scan pinned, and whether it moved in
+    * between. A moved table aborts the statement under `serializable`
+    * isolation (the default: ANY same-table change stales its answer);
+    * under `snapshot` only a LAYOUT change aborts here.
+    */
+  private def statementTable(root: File, manifest: Manifest, table: String,
+      baseVersion: Long): (TableState, TableState, Boolean) = {
+    val baseTs = resolve(root, Some(baseVersion)).table(table)
+    val ts = manifest.table(table)
+    val moved = ts != baseTs
+    if (moved && !ts.props.get("isolationLevel").contains("snapshot"))
+      throw new FinalConflict(manifest.version)
+    if (moved) checkSnapshotRebase(ts, baseTs, Set.empty, manifest.version)
+    require(ts.schemaJson.nonEmpty, s"table '$table' does not exist")
+    (ts, baseTs, moved)
   }
 
   /** The keyed diff a group replacement publishes to an active change
@@ -4847,10 +4770,8 @@ object ManifestTable {
         .withColumn(ChangeTypeCol, lit("update_preimage"))
       val post = changed.select(nCols: _*)
         .withColumn(ChangeTypeCol, lit("update_postimage"))
-      val rel = s"data/$table/chg-m$nextVersion-$nonce"
-      inserts.unionByName(deletes).unionByName(pre).unionByName(post)
-        .write.mode("overwrite").parquet(new File(root, rel).toString)
-      Some(rel)
+      Some(writeChanges(root, s"data/$table/chg-m$nextVersion-$nonce",
+        inserts.unionByName(deletes).unionByName(pre).unionByName(post)))
     } finally { joined.unpersist(); () }
   }
 
@@ -4875,21 +4796,10 @@ object ManifestTable {
     * commit that touched only other tables rebases transparently.
     */
   def applyRowDeltas(spark: SparkSession, root: File, table: String,
-      staged: DataFrame, op: String, baseVersion: Long): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val manifest = read(root).getOrElse(empty)
-      val baseTs = resolve(root, Some(baseVersion)).table(table)
-      val ts = manifest.table(table)
-      val moved = ts != baseTs
-      if (moved && !ts.props.get("isolationLevel").contains("snapshot"))
-        // serializable (default): ANY same-table change under the
-        // statement stales its answer
-        throw new ConcurrentCommitException(manifest.version)
-      if (moved) // snapshot: a LAYOUT change is never rebasable — gate
-        checkSnapshotRebase(ts, baseTs, Set.empty, manifest.version)
-      require(ts.schemaJson.nonEmpty, s"table '$table' does not exist")
+      staged: DataFrame, op: String, baseVersion: Long): Unit =
+    commitLoop(root) { manifest =>
+      val (ts, baseTs, moved) =
+        statementTable(root, manifest, table, baseVersion)
       require(ts.mergeKeys.nonEmpty && ts.numBuckets > 0,
         s"table '$table' has no recorded merge keys/bucketing")
       val schema = ts.schema
@@ -4923,65 +4833,53 @@ object ManifestTable {
           tmpRel = s"data/$table/stage-dd${manifest.version + 1}-w$nonce",
           relFor = b => s"data/$table/b$b-dd${manifest.version + 1}-$nonce")
           .toMap
-        if (written.isEmpty) return // nothing changed: no commit
-        // snapshot isolation: a delta commit's footprint is exactly the
-        // buckets its touched keys hash to — rebase when the concurrent
-        // commits stayed out of them (write-write disjointness; the
-        // statement's matched-scan covered the same buckets, keys hash
-        // deterministically)
-        if (moved)
-          checkSnapshotRebase(ts, baseTs, written.keySet, manifest.version)
-        val changePath =
-          if (ts.feedFrom < 0) None
-          else {
-            val keys = ts.mergeKeys
-            val current = reconcileDeltas(spark, root.toString, ts,
-              readDirs(spark, root.toString, ts, ts.gens.map(_.path)))
-            val touchedKeys = aligned
-              .filter(col(RowOpCol).isin("u", "d"))
-              .select((keys.map(col) :+ col(RowOpCol)).toIndexedSeq: _*)
-            val cond = keys.map(k => current(k) <=> touchedKeys(k))
-              .reduce(_ && _)
-            val old = current.join(
-              touchedKeys.withColumnRenamed(RowOpCol, "__top"),
-              cond, "inner")
-              .select((schema.fieldNames.map(current(_)) :+ col("__top"))
-                .toIndexedSeq: _*)
-            val deletes = old.filter(col("__top") === "d").drop("__top")
-              .withColumn(ChangeTypeCol, lit("delete"))
-            val pre = old.filter(col("__top") === "u").drop("__top")
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-            val post = aligned.filter(col(RowOpCol) === "u").drop(RowOpCol)
-              .withColumn(ChangeTypeCol, lit("update_postimage"))
-            val ins = aligned.filter(col(RowOpCol) === "i").drop(RowOpCol)
-              .withColumn(ChangeTypeCol, lit("insert"))
-            val rel = s"data/$table/chg-dd${manifest.version + 1}-$nonce"
-            ins.unionByName(deletes).unionByName(pre).unionByName(post)
-              .write.mode("overwrite").parquet(new File(root, rel).toString)
-            Some(rel)
-          }
-        val updates = Map(table -> TableUpdate(ts.schemaJson, Map.empty,
-          append = true, changePath = changePath,
-          deltaBuckets = written.map { case (b, g) => b -> Seq(g) },
-          props = hwmProps))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, op)
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, op))
-        gc(root, next)
-        done = true
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1 // other-table commits rebase; same-table aborts above
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1 // race casualty of a concurrent winner's GC
+        // nothing changed: no commit
+        if (written.isEmpty) Finish(())
+        else {
+          // snapshot isolation: a delta commit's footprint is exactly the
+          // buckets its touched keys hash to — rebase when the concurrent
+          // commits stayed out of them (write-write disjointness; the
+          // statement's matched-scan covered the same buckets, keys hash
+          // deterministically)
+          if (moved)
+            checkSnapshotRebase(ts, baseTs, written.keySet, manifest.version)
+          val changePath =
+            if (ts.feedFrom < 0) None
+            else {
+              val keys = ts.mergeKeys
+              val current = reconcileDeltas(spark, root.toString, ts,
+                readDirs(spark, root.toString, ts, ts.gens.map(_.path)))
+              val touchedKeys = aligned
+                .filter(col(RowOpCol).isin("u", "d"))
+                .select((keys.map(col) :+ col(RowOpCol)).toIndexedSeq: _*)
+              val cond = keys.map(k => current(k) <=> touchedKeys(k))
+                .reduce(_ && _)
+              val old = current.join(
+                touchedKeys.withColumnRenamed(RowOpCol, "__top"),
+                cond, "inner")
+                .select((schema.fieldNames.map(current(_)) :+ col("__top"))
+                  .toIndexedSeq: _*)
+              val deletes = old.filter(col("__top") === "d").drop("__top")
+                .withColumn(ChangeTypeCol, lit("delete"))
+              val pre = old.filter(col("__top") === "u").drop("__top")
+                .withColumn(ChangeTypeCol, lit("update_preimage"))
+              val post = aligned.filter(col(RowOpCol) === "u").drop(RowOpCol)
+                .withColumn(ChangeTypeCol, lit("update_postimage"))
+              val ins = aligned.filter(col(RowOpCol) === "i").drop(RowOpCol)
+                .withColumn(ChangeTypeCol, lit("insert"))
+              Some(writeChanges(root,
+                s"data/$table/chg-dd${manifest.version + 1}-$nonce",
+                ins.unionByName(deletes).unionByName(pre).unionByName(post)))
+            }
+          Publish(op, Fold(Map(table -> TableUpdate(ts.schemaJson, Map.empty,
+            append = true, changePath = changePath,
+            deltaBuckets = written.map { case (b, g) => b -> Seq(g) },
+            props = hwmProps))), ())
+        }
       } finally {
         withBucket.unpersist(); idPersisted.foreach(_.unpersist()); ()
       }
     }
-  }
 
   /** Fold every outstanding merge-on-read delta back into base
     * generations — one reconciled rewrite of exactly the delta'd
@@ -4994,15 +4892,12 @@ object ManifestTable {
     * Returns false when there was nothing to collapse.
     */
   def collapseDeltas(spark: SparkSession, root: File,
-      table: String): Boolean = {
-    var attempt = 0
-    while (true) {
-      val manifest = read(root).getOrElse(empty)
+      table: String): Boolean =
+    commitLoop(root) { manifest =>
       val ts = manifest.table(table)
-      if (ts.deltas.isEmpty) return false
-      val nonce = newNonce()
-      try {
-        val schema = ts.schema
+      if (ts.deltas.isEmpty) Finish(false)
+      else {
+        val nonce = newNonce()
         val bucketIds = ts.deltas.keySet.toSeq.sorted
         val baseDirs = bucketIds.flatMap(b =>
           ts.buckets.getOrElse(b, Nil)).map(_.path)
@@ -5015,34 +4910,19 @@ object ManifestTable {
           .persist()
         try {
           val written = writeKeyedGens(spark, root, withBucket, BucketCol,
-            schema, ts.statsCols, ts.searchCols,
+            ts.schema, ts.statsCols, ts.searchCols,
             tmpRel = s"data/$table/stage-c${manifest.version + 1}-w$nonce",
             relFor = b => s"data/$table/b$b-c${manifest.version + 1}-$nonce")
             .toMap
           // a bucket whose keys were all tombstoned rewrites to EMPTY —
           // its base generations still drop
           val rewritten = bucketIds.map(b => b -> written.get(b).toSeq).toMap
-          val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten,
-            append = false, changePath = None, logicalChange = false,
-            clearDeltas = bucketIds))
-          val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-            updates, "COLLAPSE")
-          commit(root, next, deltaOf(next, manifest.queryId,
-            manifest.lastBatch, updates, "COLLAPSE"))
-          gc(root, next)
-          return true
+          Publish("COLLAPSE", Fold(Map(table -> TableUpdate(ts.schemaJson,
+            rewritten, append = false, changePath = None,
+            logicalChange = false, clearDeltas = bucketIds))), true)
         } finally { withBucket.unpersist(); () }
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1
       }
     }
-    false
-  }
 
   /** Retrofit search sidecars and min/max stats onto EXISTING generations
     * — the `ALTER TABLE … ADD SEARCH OPTIMIZATION` analogue. The write
@@ -5068,13 +4948,11 @@ object ManifestTable {
   def buildIndexes(spark: SparkSession, root: File, table: String,
       searchCols: Seq[String], statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.util.sketch.BloomFilter
-    var attempt = 0
-    var result = -1L
-    while (result < 0) {
-      val manifest = read(root).getOrElse(empty)
+    // a retry rebases: a data commit may have replaced generations
+    commitLoop(root) { manifest =>
       val ts = manifest.table(table)
-      if (ts.schemaJson.isEmpty) return 0L
-      val schema = ts.schema
+      // a missing table has no generations, so nothing to index
+      val schema = if (ts.schemaJson.isEmpty) StructType(Nil) else ts.schema
       val search = searchCols.distinct.filter(c =>
         schema.fieldNames.contains(c) && searchKind(schema(c).dataType).nonEmpty)
       val stats = statsCols.distinct.filter(c =>
@@ -5096,8 +4974,8 @@ object ManifestTable {
       val todo = ts.gens.filter(g =>
         missingSearch(g).nonEmpty || missingStats(g).nonEmpty ||
           missingNdv(g).nonEmpty || missingKll(g).nonEmpty)
-      if (todo.isEmpty) return 0L
-      try {
+      if (todo.isEmpty) Finish(0L)
+      else {
         val conf = new org.apache.spark.util.SerializableConfiguration(
           spark.sessionState.newHadoopConf())
         // -- sidecar backfill: one job per requested column over the
@@ -5119,10 +4997,7 @@ object ManifestTable {
               val partial = scala.collection.mutable.HashMap
                 .empty[String, BloomFilter]
               it.foreach { r =>
-                val f = r.getString(0)
-                val dir = new File(
-                  if (f.startsWith("file:")) new java.net.URI(f).getPath
-                  else f).getParentFile.getCanonicalPath
+                val dir = genDirOf(r.getString(0))
                 val bf = partial.getOrElseUpdate(dir,
                   BloomFilter.create(
                     bSizes.value.getOrElse(dir, 1L), fpp))
@@ -5177,26 +5052,13 @@ object ManifestTable {
               ndv = nd ++ g.ndv, kll = kl ++ g.kll)
           }
         }
-        val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten,
-          append = false, changePath = None, logicalChange = false,
+        Publish("INDEX", Fold(Map(table -> TableUpdate(ts.schemaJson,
+          rewritten, append = false, changePath = None,
+          logicalChange = false,
           statsCols = (ts.statsCols ++ stats).distinct,
-          searchCols = (ts.searchCols ++ search).distinct))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, "INDEX")
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, "INDEX"))
-        gc(root, next)
-        result = todo.size.toLong
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1 // rebase: a data commit may have replaced gens
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1 // same race-casualty rule as mergeBatch
+          searchCols = (ts.searchCols ++ search).distinct))), todo.size.toLong)
       }
     }
-    result
   }
 
   /** One policy-driven maintenance sweep over every table of the root
@@ -5281,18 +5143,15 @@ object ManifestTable {
   def rebucket(spark: SparkSession, root: File, table: String,
       newBuckets: Int, statsCols: Seq[String] = Nil): Unit = {
     require(newBuckets > 0, s"bucket count must be positive: $newBuckets")
-    var attempt = 0
-    var committed: Option[Manifest] = None
-    while (committed.isEmpty) {
-      collapseDeltas(spark, root, table): Unit
-      val manifest = read(root).getOrElse(empty)
+    val collapse = () => collapseDeltas(spark, root, table): Unit
+    commitLoop(root, prepare = collapse) { manifest =>
       val ts = manifest.table(table)
       require(ts.schemaJson.nonEmpty, s"table '$table' does not exist")
       require(ts.mergeKeys.nonEmpty,
         s"table '$table' has no recorded merge keys to bucket by")
-      if (ts.numBuckets == newBuckets) return
-      val nonce = newNonce()
-      try {
+      if (ts.numBuckets == newBuckets) Finish(())
+      else {
+        val nonce = newNonce()
         val df = spark.read.schema(ts.schema)
           .parquet(ts.gens.map(g => new File(root, g.path).toString): _*)
         val withB = df.withColumn(BucketCol,
@@ -5316,27 +5175,21 @@ object ManifestTable {
           relFor = b => s"data/$table/b$b-rb${manifest.version + 1}-$nonce",
           spread = spread)
         val rewritten = written.map { case (b, g) => b -> Seq(g) }.toMap
-        val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten,
-          append = false, changePath = None, logicalChange = false,
-          mergeKeys = ts.mergeKeys, numBuckets = newBuckets,
-          replaceAll = true))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, s"REBUCKET:${ts.numBuckets}->$newBuckets")
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, "REBUCKET"))
-        committed = Some(next)
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1 // rebase on the interleaved commit and re-derive
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1 // same race-casualty rule as mergeBatch
+        Publish(s"REBUCKET:${ts.numBuckets}->$newBuckets",
+          Fold(Map(table -> TableUpdate(ts.schemaJson, rewritten,
+            append = false, changePath = None, logicalChange = false,
+            mergeKeys = ts.mergeKeys, numBuckets = newBuckets,
+            replaceAll = true))), ())
       }
     }
-    committed.foreach(gc(root, _))
   }
 
+  /** Compact a table's multi-generation buckets back to one generation each
+    * — the micro-partition compaction that keeps append-mostly tables' file
+    * counts bounded. Concatenation only (append generations never contain
+    * conflicting merge keys — merges already rewrite); published as a
+    * normal atomic commit, readers never see a half-compacted table.
+    */
   def compact(spark: SparkSession, root: File, table: String = DefaultTable,
       statsCols: Seq[String] = Nil,
       /** ≥ 0 enables MINOR compaction (the LSM / OPTIMIZE-binpack
@@ -5350,22 +5203,21 @@ object ManifestTable {
         * one generation — major compaction, the previous behavior.
         */
       smallRows: Long = -1L): Unit = {
-    var attempt = 0
-    var committed: Option[Manifest] = None
-    while (committed.isEmpty) {
-      // compaction's first job on a merge-on-read table: fold the
-      // outstanding row deltas into base (its own commit), THEN collapse
-      // multi-generation buckets
-      collapseDeltas(spark, root, table): Unit
-      val manifest = read(root).getOrElse(empty)
+    // compaction's first job on a merge-on-read table: fold the
+    // outstanding row deltas into base (its own commit), THEN collapse
+    // multi-generation buckets; a retry rebases on an interleaved data
+    // commit, which may have split or replaced the very buckets this
+    // pass concatenated
+    val collapse = () => collapseDeltas(spark, root, table): Unit
+    commitLoop(root, prepare = collapse) { manifest =>
       val ts = manifest.table(table)
       def smalls(gens: Seq[BucketGen]): Seq[BucketGen] =
         if (smallRows < 0L) gens
         else gens.filter(g => g.rows < 0L || g.rows <= smallRows)
       val multi = ts.buckets.filter(kv => smalls(kv._2).length > 1)
-      if (multi.isEmpty) return
-      val nonce = newNonce()
-      try {
+      if (multi.isEmpty) Finish(())
+      else {
+        val nonce = newNonce()
         // every bucket's folded generations rewrite in ONE keyed pass,
         // each bucket into one generation
         val fold = multi.toSeq.flatMap { case (b, gens) => smalls(gens).map(b -> _) }
@@ -5384,28 +5236,13 @@ object ManifestTable {
         val rewritten = multi.map { case (b, gens) =>
           b -> (gens.filterNot(g => folded(g.path)) ++ written.get(b))
         }
-        val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten,
-          append = false,
+        Publish("COMPACT", Fold(Map(table -> TableUpdate(ts.schemaJson,
+          rewritten, append = false,
           // physical-only rewrite: no logical change, an active feed
           // stays intact (no entry, no reset)
-          changePath = None, logicalChange = false))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, "COMPACT")
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, "COMPACT"))
-        committed = Some(next)
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          // a data commit slipped in: rebase on it (it may have split or
-          // replaced the very buckets this pass concatenated) and retry
-          attempt += 1
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1 // same race-casualty rule as mergeBatch
+          changePath = None, logicalChange = false))), ())
       }
     }
-    committed.foreach(gc(root, _))
   }
 
   /** Re-cluster one table on `column` — the explicit-maintenance analogue
@@ -5492,17 +5329,15 @@ object ManifestTable {
           rs.count { case (o, os) => (o ne g) && over(s, os) } > overlapBudget
         }.map(_._1)
       }
-    var attempt = 0
-    var rewroteGens = 0L
-    var committed: Option[Manifest] = None
-    while (committed.isEmpty) {
-      collapseDeltas(spark, root, table): Unit // recluster reads base bytes
-      val manifest = read(root).getOrElse(empty)
+    // recluster reads base bytes: fold merge-on-read deltas first; a
+    // retry rebases on an interleaved data commit and re-clusters
+    val collapse = () => collapseDeltas(spark, root, table): Unit
+    commitLoop(root, prepare = collapse) { manifest =>
       val ts = manifest.table(table)
-      if (ts.buckets.isEmpty) return 0L
       val stats = (statsCols ++ columns).distinct
       val nonce = newNonce()
-      try {
+      if (ts.buckets.isEmpty) Finish(0L)
+      else {
         // buckets recluster INDEPENDENTLY (distinct input gens, distinct
         // output dirs) — submit several buckets' job chains concurrently
         // so the cluster pipelines them instead of draining one bucket's
@@ -5640,29 +5475,15 @@ object ManifestTable {
           try Await.result(Future.sequence(futures),
             scala.concurrent.duration.Duration.Inf)
           finally pool.shutdown()
-        rewroteGens = results.map(_._2._2.toLong).sum
+        val rewroteGens = results.map(_._2._2.toLong).sum
         // incremental run with every generation already inside its
         // window: commit nothing (the sweep was metadata-only)
-        if (overlapBudget >= 0 && rewroteGens == 0L) return 0L
-        val rewritten = results.map { case (b, (gs, _)) => b -> gs }.toMap
-        val updates = Map(table -> TableUpdate(ts.schemaJson, rewritten,
-          append = false, changePath = None, logicalChange = false))
-        val next = manifest.advance(manifest.queryId, manifest.lastBatch,
-          updates, "RECLUSTER")
-        commit(root, next, deltaOf(next, manifest.queryId,
-          manifest.lastBatch, updates, "RECLUSTER"))
-        committed = Some(next)
-      } catch {
-        case _: ConcurrentCommitException if attempt < MaxCommitAttempts - 1 =>
-          attempt += 1 // a data commit slipped in: rebase and re-cluster
-        case e: Throwable if attempt < MaxCommitAttempts - 1 &&
-            isFileRace(e) &&
-            read(root).map(_.version).getOrElse(0L) != manifest.version =>
-          attempt += 1 // same race-casualty rule as mergeBatch
+        if (overlapBudget >= 0 && rewroteGens == 0L) Finish(0L)
+        else Publish("RECLUSTER", Fold(Map(table -> TableUpdate(ts.schemaJson,
+          results.map { case (b, (gs, _)) => b -> gs }.toMap, append = false,
+          changePath = None, logicalChange = false))), rewroteGens)
       }
     }
-    committed.foreach(gc(root, _))
-    rewroteGens
   }
 
   /** Unified table schema: existing columns keep their position and type,

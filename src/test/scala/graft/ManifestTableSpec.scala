@@ -1773,4 +1773,112 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.readChangeFeed(spark, target, 1L, table = "b")
     }
   }
+
+  test("every change-feed writer lands one parquet file per change dir, and the feed still reads exact rows") {
+    val target = tmp("graft_chg_files")
+    val root = new File(target)
+    val t = ManifestTable.DefaultTable
+    ManifestTable.mergeBatch(root, "q", 0L, Seq(TableBatch(t,
+      rows(0 until 200, 1), Seq("event_id"), 4, changeFeed = true,
+      props = Map("retainVersions" -> "10"))))
+    // replace-by-key: keys 0..9 leave, 10..29 update, 200..209 arrive
+    ManifestTable.mergeBatch(root, "q", 1L, Seq(TableBatch(t,
+      rows(10 until 30, 2).unionByName(rows(200 until 210, 2)),
+      Seq("event_id"), 4, changeFeed = true,
+      deleteKeys = Some((0L until 10L).toDF("event_id")))))
+    val v2 = ManifestTable.read(root).get.version
+    assert(ManifestTable.deleteWhere(spark, root,
+      col("event_id").between(100, 109)) == 10L)
+    assert(ManifestTable.updateWhere(spark, root,
+      col("event_id").between(150, 159), Map("value" -> lit(-1.0))) == 10L)
+    // back to v2: 100..109 return, 150..159 revert their value
+    ManifestTable.restoreTable(spark, root, t, v2)
+
+    val chgDirs = new File(root, s"data/$t").listFiles
+      .filter(_.getName.startsWith("chg-"))
+    assert(chgDirs.length == 5, chgDirs.map(_.getName).mkString(", "))
+    chgDirs.foreach { d =>
+      val parts = d.listFiles.count(_.getName.endsWith(".parquet"))
+      assert(parts == 1, s"${d.getName} holds $parts parquet files")
+    }
+    val feed = ManifestTable.readChangeFeed(spark, target, 1L)
+    val byType = feed
+      .groupBy(ManifestTable.CommitVersionCol, ManifestTable.ChangeTypeCol)
+      .count().collect()
+      .map(r => (r.getLong(0) - 1L, r.getString(1)) -> r.getLong(2)).toMap
+    assert(byType == Map(
+      (0L, "insert") -> 200L,
+      (1L, "delete") -> 10L, (1L, "insert") -> 10L,
+      (1L, "update_preimage") -> 20L, (1L, "update_postimage") -> 20L,
+      (2L, "delete") -> 10L,
+      (3L, "update_preimage") -> 10L, (3L, "update_postimage") -> 10L,
+      (4L, "insert") -> 10L,
+      (4L, "update_preimage") -> 10L, (4L, "update_postimage") -> 10L),
+      s"feed rows per (version - 1, type): $byType")
+    // the feed rolls the v1 snapshot forward to the live table exactly
+    val rolled = ManifestTable.applyChanges(
+      ManifestTable.readTable(spark, target, Some(1L)),
+      ManifestTable.readChangeFeed(spark, target, 2L), Seq("event_id"))
+    assert(rolled.collect().map(_.toString).toSet ==
+      ManifestTable.readTable(spark, target).collect().map(_.toString).toSet)
+  }
+
+  test("the commit fault injector fires for every verb: deleteWhere and restoreTable rebase past a race casualty, compact surfaces a deterministic failure at once") {
+    val target = tmp("graft_occ_verbs")
+    val root = new File(target)
+    val t = ManifestTable.DefaultTable
+    def ids(): Set[Long] = ManifestTable.readTable(spark, target)
+      .select("event_id").collect().map(_.getLong(0)).toSet
+    ManifestTable.mergeBatch(root, "wA", 0L, Seq(TableBatch(t,
+      rows(0 until 40, 1), Seq("event_id"), 2, changeFeed = true,
+      props = Map("retainVersions" -> "20"))))
+    // one competing merge lands while the verb's attempt sits between
+    // its writes and its commit, then the attempt fails with `failure`
+    var calls = 0
+    def raceOnce(batchId: Long, competing: Range,
+        failure: String => Throwable): Unit = {
+      calls = 0
+      ManifestTable.commitFaultInjector = { (r, baseV) =>
+        if (r == root) {
+          calls += 1
+          ManifestTable.commitFaultInjector = (_, _) => ()
+          ManifestTable.mergeBatch(root, "wB", batchId, Seq(TableBatch(t,
+            rows(competing, 1), Seq("event_id"), 2, changeFeed = true)))
+          throw failure(s"$target/data/$t/b0-d${baseV + 1}-deadbeef")
+        }
+      }
+    }
+    val fnfe = (p: String) =>
+      new java.io.FileNotFoundException(s"File $p does not exist")
+    try {
+      raceOnce(0L, 1000 until 1010, fnfe)
+      assert(ManifestTable.deleteWhere(spark, root,
+        col("event_id") < 10) == 10L)
+      assert(calls == 1, "injector never fired for deleteWhere")
+      assert(ids() == ((10 until 40) ++ (1000 until 1010)).map(_.toLong).toSet)
+
+      raceOnce(1L, 2000 until 2005, fnfe)
+      val restored = ManifestTable.restoreTable(spark, root, t, 1L)
+      assert(calls == 1, "injector never fired for restoreTable")
+      assert(ids() == (0L until 40L).toSet)
+      // the rebased restore diffed against the winner's state: its feed
+      // entry retracts both competing merges and re-inserts 0..9
+      val diff = ManifestTable.readChangeFeed(spark, target, restored)
+        .groupBy(ManifestTable.ChangeTypeCol).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(diff == Map("delete" -> 15L, "insert" -> 10L), s"$diff")
+
+      ManifestTable.mergeBatch(root, "wA", 1L, Seq(TableBatch("c",
+        rows(0 until 20, 1), Seq("event_id"), 2, append = true)))
+      ManifestTable.mergeBatch(root, "wA", 2L, Seq(TableBatch("c",
+        rows(20 until 40, 1), Seq("event_id"), 2, append = true)))
+      raceOnce(2L, 3000 until 3005, _ => new RuntimeException(
+        "[TABLE_OR_VIEW_NOT_FOUND] The table or view `canonical` does not exist"))
+      val e = intercept[RuntimeException] {
+        ManifestTable.compact(spark, root, "c")
+      }
+      assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"))
+      assert(calls == 1, "a deterministic failure was retried as a GC race")
+    } finally ManifestTable.commitFaultInjector = (_, _) => ()
+  }
 }

@@ -109,4 +109,24 @@ class RebucketSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("rebucket"))
   }
+
+  test("a rebucket at a delta-entry version records REBUCKET:<old>-><new> in history, exactly as a checkpoint version would") {
+    val root = new File(
+      java.nio.file.Files.createTempDirectory("graft_rb_hist").toString)
+    ManifestTable.mergeBatch(root, "q", 0L, Seq(
+      TableBatch("t", mk(0L until 32L), Seq("id"), 8)))
+    ManifestTable.mergeBatch(root, "q", 1L, Seq(
+      TableBatch("t", mk(32L until 48L), Seq("id"), 8)))
+    ManifestTable.rebucket(spark, root, "t", 4)
+    val v = ManifestTable.read(root).get.version
+    assert(v % ManifestTable.CheckpointInterval != 0)
+    // the version file is a delta entry, not a full snapshot
+    val entry = new String(java.nio.file.Files.readAllBytes(
+      new File(root, s"MANIFEST.v$v").toPath))
+    assert(entry.contains("\"delta\""), s"v$v should be a delta entry")
+    val op = ManifestTable.history(spark, root)
+      .filter(col("version") === v).head.getString(1)
+    assert(op == "REBUCKET:8->4", s"history op at v$v: $op")
+    assert(ManifestTable.read(root).get.info.operation == "REBUCKET:8->4")
+  }
 }
