@@ -148,7 +148,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
         // the incoming frame is streaming-tagged and single-action; the
         // merge runs several actions over it — re-wrap as a batch frame
         // over the same rows (the DeltaSink pattern)
-        val batch = org.apache.spark.sql.graftbridge.Bridge.batchDf(data)
+        val batch = org.apache.spark.sql.graftbridge.Bridge.lineageFree(data)
         val existing = ManifestTable.read(new File(root))
           .map(_.table(table)).filter(_.schemaJson.nonEmpty)
         ManifestTable.mergeBatch(new File(root), qid, batchId,

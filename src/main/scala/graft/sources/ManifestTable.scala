@@ -6,6 +6,7 @@ import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -1962,6 +1963,61 @@ object ManifestTable {
   private def newNonce(): String =
     java.util.UUID.randomUUID().toString.replace("-", "")
 
+  /** Run independent job chains (one table of a [[mergeBatch]], one
+    * bucket of a [[reclusterBy]]) concurrently, at most `width` at once,
+    * on a private driver pool, each under the caller's active session and
+    * local properties (job group, streaming query id), and return every
+    * task's outcome in input order. It waits for EVERY started task
+    * before it returns or throws, so no task outlives the call: neither a
+    * failure nor an interrupt of the caller leaves a sibling writing dirs
+    * after the caller has moved on to a retry, a GC or a stop. Once a
+    * task fails or the caller is interrupted, tasks not yet started fail
+    * without running; running ones are waited for, never interrupted (an
+    * interrupt only abandons a submitted Spark job, which keeps writing).
+    * An interrupted caller gets its InterruptedException once every task
+    * has settled. A caller that needs the values takes `.map(_.get)`,
+    * which surfaces the first failure in input order. One task runs
+    * inline.
+    */
+  private def settleAll[A](spark: SparkSession, width: Int,
+      tasks: Seq[() => A]): Seq[scala.util.Try[A]] =
+    if (tasks.size <= 1) tasks.map(t => scala.util.Try(t()))
+    else {
+      import java.util.concurrent.{CancellationException, ExecutionException}
+      val ids = new java.util.concurrent.atomic.AtomicInteger
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(tasks.size, width), { (r: Runnable) =>
+          val t = new Thread(r, s"graft-driver-task-${ids.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        })
+      val halted = new java.util.concurrent.atomic.AtomicBoolean
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val futures =
+        try tasks.map(t => org.apache.spark.sql.execution.SQLExecution
+          .withThreadLocalCaptured(session, pool) {
+            if (halted.get) throw new CancellationException(
+              "not started: a sibling task failed or the caller was interrupted")
+            try t() catch { case e: Throwable => halted.set(true); throw e }
+          })
+        finally pool.shutdown()
+      var interrupted: Option[InterruptedException] = None
+      val settled = futures.map { f =>
+        var out: Option[scala.util.Try[A]] = None
+        while (out.isEmpty)
+          try out = Some(scala.util.Success(f.get())) catch {
+            case e: ExecutionException => out = Some(scala.util.Failure(e.getCause))
+            case e: CancellationException => out = Some(scala.util.Failure(e))
+            case e: InterruptedException =>
+              halted.set(true)
+              if (interrupted.isEmpty) interrupted = Some(e)
+          }
+        out.get
+      }
+      interrupted.foreach(e => throw e)
+      settled
+    }
+
   private def versionFile(root: File, v: Long): File =
     new File(root, s"$ManifestName.v$v")
 
@@ -3136,6 +3192,15 @@ object ManifestTable {
     * Its retry loop is its own (intent-ledger restarts, staged-update
     * reuse across attempts) but retries on the shared [[retryable]] rule
     * and commits through [[publish]].
+    *
+    * Each attempt runs in two phases over all tables at once, on
+    * [[settleAll]]: phase A plans every table concurrently (adjust,
+    * staged rebase, else align, persist, enforce constraints and find
+    * the touched buckets); the whole intent is then declared ONCE; phase
+    * B derives every planned table concurrently (read the touched
+    * generations, merge, write generations and change feed). The tables
+    * write disjoint dirs and meet only in the one publish, so their job
+    * chains share the cores instead of queueing behind each other.
     */
   def mergeBatch(root: File, qid: String, batchId: Long,
       batches: Seq[TableBatch],
@@ -3143,6 +3208,9 @@ object ManifestTable {
       // [[mergeBatchEnforced]]'s hidden-row filter; identity otherwise
       adjust: (Manifest, TableBatch) => TableBatch = (_, tb) => tb)
       : Unit = {
+    // nothing to merge never commits (see the all-empty case below)
+    if (batches.isEmpty) return
+    val spark = batches.head.rows.sparkSession
     var attempt = 0
     var committed: Option[Manifest] = None
     // staged bucket rewrites carried ACROSS OCC retries: per table, the
@@ -3170,16 +3238,6 @@ object ManifestTable {
       if (nested) 0L else writerTs + IntentPatienceMs
     val declared = scala.collection.mutable.Map.empty[String, (Int, Set[Long])]
     def myIntent = Intent(nonce, writerTs, declared.toMap)
-    // called by mergeTable the moment a table's touched-bucket set is
-    // known (BEFORE any expensive per-bucket work): declare, then yield
-    // to earlier overlapping writers — if we actually waited, the
-    // manifest may have moved, so restart the attempt pre-derivation
-    val onTouched = (name: String, numBuckets: Int, buckets: Set[Long]) => {
-      declared(name) = (numBuckets, buckets)
-      writeIntent(root, myIntent)
-      if (awaitIntentTurn(root, myIntent, patienceDeadline))
-        throw RestartAttempt()
-    }
     var restarts = 0
     try {
     while (committed.isEmpty) {
@@ -3198,23 +3256,60 @@ object ManifestTable {
       val manifest = read(root).getOrElse(empty)
       if (manifest.queryId == qid && batchId <= manifest.lastBatch)
         return // replayed batch of the SAME query: already committed
+      val plans = scala.collection.mutable.ListBuffer.empty[TablePlan]
       try {
-        val updates: Map[String, TableUpdate] = batches.flatMap { tb0 =>
+        // phase A, plan: a table whose staged update rebases onto this
+        // attempt is done (Left); every other one is planned (Right)
+        val prior = staged.toMap
+        val planned = settleAll(spark, batches.size, batches.map { tb0 => () =>
           val tb = adjust(manifest, tb0)
           val prev = manifest.table(tb.name)
-          val reused = staged.get(tb.name).flatMap { case (base, upd) =>
+          val reused = prior.get(tb.name).flatMap { case (base, upd) =>
             if (rebasableUpdate(base, prev, upd))
               rebaseStaged(root, upd, manifest.version + 1)
             else None
           }
-          if (staged.contains(tb.name) && reused.isEmpty)
-            mergeRestageCount.incrementAndGet(): Unit
-          staged.remove(tb.name)
-          val update = reused.orElse(
-            mergeTable(root, manifest, nonce, tb, onTouched))
-          update.foreach(u => staged += tb.name -> ((prev, u)))
-          update.map(tb.name -> _)
-        }.toMap
+          reused.map(u => Left((prev, u)))
+            .getOrElse(Right(planTable(manifest, tb)))
+        })
+        // staged bookkeeping stays on this thread; every settled plan is
+        // registered for release before a failure surfaces
+        batches.zip(planned).foreach {
+          case (tb, scala.util.Success(how)) =>
+            if (staged.contains(tb.name) && how.isRight)
+              mergeRestageCount.incrementAndGet(): Unit
+            staged.remove(tb.name)
+            how match {
+              case Left(u) => staged += tb.name -> u
+              case Right(p) => plans += p
+            }
+          case _ =>
+        }
+        val outcomes = planned.map(_.get)
+        // the whole intent, declared once, BEFORE any derivation: yield
+        // to earlier overlapping writers — if we actually waited, the
+        // manifest may have moved, so restart the attempt
+        if (plans.nonEmpty) {
+          plans.foreach(p => declared(p.tb.name) = (p.tb.numBuckets,
+            if (p.tb.overwrite) Set(-1L) else p.touched.toSet))
+          writeIntent(root, myIntent)
+          if (awaitIntentTurn(root, myIntent, patienceDeadline))
+            throw RestartAttempt()
+        }
+        // phase B, derive: every planned table's job chain at once
+        val derived = settleAll(spark, plans.size,
+          plans.toSeq.map(p => () => deriveTable(root, manifest, nonce, p)))
+        plans.zip(derived).foreach { case (p, d) =>
+          d.foreach(_.foreach(u => staged += p.tb.name -> ((p.prev, u))))
+        }
+        val fresh = plans.map(_.tb.name).zip(derived.map(_.get)).toMap
+        val updates: Map[String, TableUpdate] =
+          batches.zip(outcomes).flatMap { case (tb, how) =>
+            (how match {
+              case Left((_, u)) => Some(u)
+              case Right(p) => fresh(p.tb.name)
+            }).map(tb.name -> _)
+          }.toMap
         // an all-empty micro-batch (Spark does deliver them) must NOT
         // commit: a bucketless manifest helps no reader, and re-running
         // the empty batch is a harmless no-op, so skipping the lastBatch
@@ -3228,15 +3323,15 @@ object ManifestTable {
           Fold(updates, Some((qid, batchId)))))
       } catch {
         case _: RestartAttempt if restarts < 10000 =>
-          // an intent wait mid-attempt: nothing was derived for the
-          // waiting table; re-read the manifest and go again without
-          // burning an OCC retry (the wait itself is patience-bounded)
+          // an intent wait after planning: nothing was derived yet;
+          // re-read the manifest and go again without burning an OCC
+          // retry (the wait itself is patience-bounded)
           restarts += 1
         case e: Throwable if retryable(root, e, attempt, manifest) =>
           // lost the race, or a winner's GC collected this attempt's
           // in-flight dirs: its dirs are orphans GC collects; rebase
           attempt += 1
-      }
+      } finally plans.foreach(_.release())
     }
     } finally {
       removeIntent(root, nonce)
@@ -3566,13 +3661,29 @@ object ManifestTable {
     recorded.toList
   }
 
-  /** Merge or append one table's batch rows into its touched buckets; None
-    * when the batch brings this table no rows.
+  /** One table's phase-A outcome in a [[mergeBatch]] attempt: the
+    * adjusted batch and the state it merges into, the unified schema,
+    * the aligned rows with their bucket column and the delete keys (both
+    * lineage-free views of persisted frames), the identity high-water
+    * props, and the buckets the batch touches. [[release]] unpersists
+    * the `pinned` frames under the views.
     */
-  private def mergeTable(root: File, manifest: Manifest, nonce: String,
-      tb: TableBatch,
-      onTouched: (String, Int, Set[Long]) => Unit = (_, _, _) => ())
-      : Option[TableUpdate] = {
+  private case class TablePlan(tb: TableBatch, prev: TableState,
+      unified: StructType, incoming: DataFrame, delKeys: Option[DataFrame],
+      hwmProps: Map[String, String], pinned: Seq[DataFrame],
+      touched: Seq[Long]) {
+    def release(): Unit = pinned.foreach(_.unpersist())
+  }
+
+  /** Phase A of one table's merge: align the batch to the unified
+    * schema, persist it, enforce the CHECK constraints and find the
+    * touched buckets — everything before the intent is declared. The
+    * plan holds views of the persisted rows that carry none of the
+    * batch's lineage (`Bridge.lineageFree`), so the derivation's plans
+    * stay small however long the chain that built the batch. A failure
+    * releases what it pinned.
+    */
+  private def planTable(manifest: Manifest, tb: TableBatch): TablePlan = {
     val spark = tb.rows.sparkSession
     val prev = manifest.table(tb.name)
     // an overwrite replaces the table wholesale, schema included — nothing
@@ -3654,112 +3765,122 @@ object ManifestTable {
       fillIdentitySlots(spark, unified, effProps, aligned)
     val bucketExpr =
       pmod(xxhash64(tb.mergeKeys.map(col).toIndexedSeq: _*), lit(tb.numBuckets))
-    val incoming = withIds.withColumn(BucketCol, bucketExpr).persist()
-    val delKeys = tb.deleteKeys.map(_.select(tb.mergeKeys.map(col).toIndexedSeq: _*)
+    val rowsCached = withIds.withColumn(BucketCol, bucketExpr).persist()
+    val delCached = tb.deleteKeys.map(_.select(tb.mergeKeys.map(col).toIndexedSeq: _*)
       .distinct().withColumn(BucketCol, bucketExpr).persist())
+    val pinned = rowsCached +: (delCached.toSeq ++ idPersisted)
     try {
+      val incoming = Bridge.lineageFree(rowsCached)
+      val delKeys = delCached.map(Bridge.lineageFree)
       // CHECK constraints gate the batch BEFORE any bucket work — the
       // table's recorded constraints plus any this very batch declares
       enforceConstraints(tb.name, effProps, incoming)
-      val touchedRows = incoming.select(BucketCol).distinct()
-        .collect().map(_.getLong(0)).toSet
+      // ONE job finds both sides' buckets, each row tagged by its side;
       // delete-only buckets matter only where committed generations exist
-      val touchedDels = delKeys.fold(Set.empty[Long])(
-        _.select(BucketCol).distinct().collect().map(_.getLong(0)).toSet
-          .filter(prev.buckets.contains))
-      val touched = (touchedRows ++ touchedDels).toSeq.sorted
-      // declare the bucket intent (and possibly yield to an earlier
-      // overlapping writer) BEFORE the expensive per-bucket derivation —
-      // an overwrite claims the whole table
-      onTouched(tb.name, tb.numBuckets,
-        if (tb.overwrite) Set(-1L) else touched.toSet)
-      if (touched.isEmpty) None
-      else {
-        // the EXPENSIVE work starts here (past any intent wait/restart):
-        // this is the derivation the contention specs count
-        mergeDeriveCount.incrementAndGet(): Unit
-        val target = manifest.version + 1
-        val inc = incoming.drop(BucketCol)
-        // merge mode reads every touched bucket's generations in ONE scan,
-        // each row tagged with the bucket it was read from; append and
-        // overwrite never read existing data
-        val existingGens =
-          if (tb.append || tb.overwrite) Nil
-          else touched.flatMap(b => prev.buckets.getOrElse(b, Nil).map(b -> _))
-        // ONE plan for the whole table: a merge key hashes to exactly one
-        // bucket, so upserting (and slicing deletes) across all touched
-        // buckets at once equals doing it bucket by bucket
-        val (out, changes): (DataFrame, Option[DataFrame]) =
-          if (existingGens.isEmpty)
-            (incoming, if (!tb.changeFeed) None
-              else Some(inc.withColumn(ChangeTypeCol, lit("insert"))))
-          else {
-            val tagged = readKeyed(spark, root, unified, existingGens, BucketCol)
-            val existing = tagged.drop(BucketCol)
-            def keyMatch(l: DataFrame, r: DataFrame) =
-              tb.mergeKeys.map(k => l(k) <=> r(k)).reduce(_ && _)
-            // replace-by-key: drop every existing row whose key tuple is
-            // in the delete set, then UPSERT the batch rows (a batch key
-            // not in the set must still replace its existing row)
-            val slice = delKeys.map(_.drop(BucketCol))
-            val kept = slice.fold(tagged)(sl =>
-              tagged.join(sl, keyMatch(tagged, sl), "left_anti"))
-            // persisted: the keyed writer reads its frame twice
-            val merged = graft.ingest.MergeUpsert
-              .upsert(kept, incoming, tb.mergeKeys)
-              .select((unified.fieldNames :+ BucketCol).map(col).toIndexedSeq: _*)
-              .persist()
-            val chg = if (!tb.changeFeed) None else {
-              // delete preimages: rows removed by the delete set whose
-              // key does NOT come back in this batch (a returning key is
-              // an update, not a delete+insert pair)
-              val deletes = slice.map { sl =>
-                val removed = existing.join(sl, keyMatch(existing, sl),
-                  "left_semi")
-                val incKeys = inc.select(tb.mergeKeys.map(col).toIndexedSeq: _*)
-                removed.join(incKeys, keyMatch(removed, incKeys), "left_anti")
-                  .withColumn(ChangeTypeCol, lit("delete"))
-              }
-              Some(deletes.foldLeft(tagChanges(existing, inc, tb.mergeKeys))(
-                _ unionByName _))
+      val isRow = "__graft_is_row"
+      val sides = delKeys.foldLeft(
+        incoming.select(col(BucketCol), lit(true).as(isRow)))(
+        (rs, dk) => rs.unionByName(dk.select(col(BucketCol), lit(false).as(isRow))))
+      val touched = sides.distinct().collect().toSeq
+        .filter(r => r.getBoolean(1) || prev.buckets.contains(r.getLong(0)))
+        .map(_.getLong(0)).distinct.sorted
+      TablePlan(tb, prev, unified, incoming, delKeys, hwmProps, pinned, touched)
+    } catch { case e: Throwable => pinned.foreach(_.unpersist()); throw e }
+  }
+
+  /** Phase B of one table's merge, past the declared intent: read the
+    * touched buckets' generations, merge the planned rows into them, and
+    * write the new generations and the change feed — None when the batch
+    * touches no bucket.
+    */
+  private def deriveTable(root: File, manifest: Manifest, nonce: String,
+      plan: TablePlan): Option[TableUpdate] = {
+    val TablePlan(tb, prev, unified, incoming, delKeys, hwmProps, _, touched) =
+      plan
+    val spark = tb.rows.sparkSession
+    if (touched.isEmpty) None
+    else {
+      // the EXPENSIVE work starts here (past any intent wait/restart):
+      // this is the derivation the contention specs count
+      mergeDeriveCount.incrementAndGet(): Unit
+      val target = manifest.version + 1
+      val inc = incoming.drop(BucketCol)
+      // merge mode reads every touched bucket's generations in ONE scan,
+      // each row tagged with the bucket it was read from; append and
+      // overwrite never read existing data
+      val existingGens =
+        if (tb.append || tb.overwrite) Nil
+        else touched.flatMap(b => prev.buckets.getOrElse(b, Nil).map(b -> _))
+      // ONE plan for the whole table: a merge key hashes to exactly one
+      // bucket, so upserting (and slicing deletes) across all touched
+      // buckets at once equals doing it bucket by bucket
+      val (out, changes): (DataFrame, Option[DataFrame]) =
+        if (existingGens.isEmpty)
+          (incoming, if (!tb.changeFeed) None
+            else Some(inc.withColumn(ChangeTypeCol, lit("insert"))))
+        else {
+          val tagged = readKeyed(spark, root, unified, existingGens, BucketCol)
+          val existing = tagged.drop(BucketCol)
+          def keyMatch(l: DataFrame, r: DataFrame) =
+            tb.mergeKeys.map(k => l(k) <=> r(k)).reduce(_ && _)
+          // replace-by-key: drop every existing row whose key tuple is
+          // in the delete set, then UPSERT the batch rows (a batch key
+          // not in the set must still replace its existing row)
+          val slice = delKeys.map(_.drop(BucketCol))
+          val kept = slice.fold(tagged)(sl =>
+            tagged.join(sl, keyMatch(tagged, sl), "left_anti"))
+          // persisted: the keyed writer reads its frame twice
+          val merged = graft.ingest.MergeUpsert
+            .upsert(kept, incoming, tb.mergeKeys)
+            .select((unified.fieldNames :+ BucketCol).map(col).toIndexedSeq: _*)
+            .persist()
+          val chg = if (!tb.changeFeed) None else {
+            // delete preimages: rows removed by the delete set whose
+            // key does NOT come back in this batch (a returning key is
+            // an update, not a delete+insert pair)
+            val deletes = slice.map { sl =>
+              val removed = existing.join(sl, keyMatch(existing, sl),
+                "left_semi")
+              val incKeys = inc.select(tb.mergeKeys.map(col).toIndexedSeq: _*)
+              removed.join(incKeys, keyMatch(removed, incKeys), "left_anti")
+                .withColumn(ChangeTypeCol, lit("delete"))
             }
-            (merged, chg)
+            Some(deletes.foldLeft(tagChanges(existing, inc, tb.mergeKeys))(
+              _ unionByName _))
           }
-        try {
-          val written = writeKeyedGens(spark, root, out, BucketCol, unified,
-            // explicit batch options win; otherwise the table's RECORDED
-            // layout applies, so every writer — bespoke API, SQL INSERT,
-            // streaming sink — keeps tracking what the table declared
-            if (tb.statsCols.nonEmpty) tb.statsCols else prev.statsCols,
-            if (tb.searchCols.nonEmpty) tb.searchCols else prev.searchCols,
-            tmpRel = s"data/${tb.name}/stage-v$target-w$nonce",
-            // one immutable generation dir per (table, bucket, ATTEMPT):
-            // named by the manifest version this commit will publish
-            // (unique across query identities — batch ids alone collide
-            // when a fresh-checkpoint restart re-runs against an existing
-            // table) PLUS the writer nonce, so two CONCURRENT writers
-            // racing for the same version can never scribble on each
-            // other's dirs — the loser's become orphans GC collects once
-            // the version is decided (the in-flight guard in [[gc]])
-            relFor = b => s"data/${tb.name}/b$b-v$target-$nonce").toMap
-          // the commit's change-feed delta: one immutable dir per (table,
-          // commit), written BEFORE the manifest swap like every data dir
-          // — a crash leaves an orphan the next commit's GC removes
-          val changePath = changes.map(
-            writeChanges(root, s"data/${tb.name}/chg-v$target-$nonce", _))
-          // a merged bucket left with no rows publishes NO generation (its
-          // old ones drop); append and overwrite buckets always hold rows
-          Some(TableUpdate(unified.json,
-            touched.map(b => b -> written.get(b).toSeq).toMap, tb.append,
-            changePath, mergeKeys = tb.mergeKeys, numBuckets = tb.numBuckets,
-            replaceAll = tb.overwrite,
-            statsCols = tb.statsCols, searchCols = tb.searchCols,
-            props = tb.props ++ hwmProps))
-        } finally { if (out ne incoming) out.unpersist(); () }
-      }
-    } finally {
-      incoming.unpersist(); idPersisted.foreach(_.unpersist())
-      delKeys.foreach(_.unpersist()); ()
+          (merged, chg)
+        }
+      try {
+        val written = writeKeyedGens(spark, root, out, BucketCol, unified,
+          // explicit batch options win; otherwise the table's RECORDED
+          // layout applies, so every writer — bespoke API, SQL INSERT,
+          // streaming sink — keeps tracking what the table declared
+          if (tb.statsCols.nonEmpty) tb.statsCols else prev.statsCols,
+          if (tb.searchCols.nonEmpty) tb.searchCols else prev.searchCols,
+          tmpRel = s"data/${tb.name}/stage-v$target-w$nonce",
+          // one immutable generation dir per (table, bucket, ATTEMPT):
+          // named by the manifest version this commit will publish
+          // (unique across query identities — batch ids alone collide
+          // when a fresh-checkpoint restart re-runs against an existing
+          // table) PLUS the writer nonce, so two CONCURRENT writers
+          // racing for the same version can never scribble on each
+          // other's dirs — the loser's become orphans GC collects once
+          // the version is decided (the in-flight guard in [[gc]])
+          relFor = b => s"data/${tb.name}/b$b-v$target-$nonce").toMap
+        // the commit's change-feed delta: one immutable dir per (table,
+        // commit), written BEFORE the manifest swap like every data dir
+        // — a crash leaves an orphan the next commit's GC removes
+        val changePath = changes.map(
+          writeChanges(root, s"data/${tb.name}/chg-v$target-$nonce", _))
+        // a merged bucket left with no rows publishes NO generation (its
+        // old ones drop); append and overwrite buckets always hold rows
+        Some(TableUpdate(unified.json,
+          touched.map(b => b -> written.get(b).toSeq).toMap, tb.append,
+          changePath, mergeKeys = tb.mergeKeys, numBuckets = tb.numBuckets,
+          replaceAll = tb.overwrite,
+          statsCols = tb.statsCols, searchCols = tb.searchCols,
+          props = tb.props ++ hwmProps))
+      } finally { if (out ne incoming) out.unpersist(); () }
     }
   }
 
@@ -5342,17 +5463,16 @@ object ManifestTable {
         // output dirs) — submit several buckets' job chains concurrently
         // so the cluster pipelines them instead of draining one bucket's
         // quantile/write jobs before the next bucket starts; the commit
-        // below still swaps every bucket atomically at once
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        val futures = ts.buckets.toSeq.map { case (b, gens) =>
+        // below still swaps every bucket atomically at once, and a failed
+        // bucket surfaces only once every sibling has settled. Four at a
+        // time: each chain holds its bucket's rewrite rows persisted
+        def reclusterBucket(b: Long, gens: Seq[BucketGen])
+            : (Long, (Seq[BucketGen], Int)) = {
           val rw = violating(gens)
           // a bucket with nothing to rewrite keeps its generation list
           // verbatim — no read, no write, no job
-          if (rw.isEmpty) Future.successful(b -> (gens, 0))
-          else Future {
+          if (rw.isEmpty) b -> ((gens, 0))
+          else {
           val keepGens = gens.filterNot(g => rw.exists(_.path == g.path))
           val df = spark.read.schema(ts.schema)
             .parquet(rw.map(g => new File(root, g.path).toString): _*)
@@ -5470,11 +5590,10 @@ object ManifestTable {
               .map(_._2)
             b -> ((keepGens ++ cells, rw.size))
           } finally { df.unpersist(); () }
-        } }
-        val results =
-          try Await.result(Future.sequence(futures),
-            scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
+          }
+        }
+        val results = settleAll(spark, 4, ts.buckets.toSeq.map { case (b, gens) =>
+          () => reclusterBucket(b, gens) }).map(_.get)
         val rewroteGens = results.map(_._2._2.toLong).sum
         // incremental run with every generation already inside its
         // window: commit nothing (the sweep was metadata-only)

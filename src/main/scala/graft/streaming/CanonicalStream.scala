@@ -145,11 +145,12 @@ object CanonicalStream {
     val st = staged.persist()
     val pinned = scala.collection.mutable.ListBuffer[DataFrame](st)
     try {
-      val canonBatches: Seq[TableBatch] = if (st.isEmpty) Nil else {
-        val groupBucket =
-          pmod(xxhash64(GroupKeys.map(col).toIndexedSeq: _*), lit(Buckets))
-        val touched = st.select(groupBucket.as("b")).distinct()
-          .collect().map(_.getLong(0)).toSet
+      // the staging buckets the batch touches; none means an empty batch
+      // (one job answers both)
+      val touched = st.select(
+        pmod(xxhash64(GroupKeys.map(col).toIndexedSeq: _*), lit(Buckets)))
+        .distinct().collect().map(_.getLong(0)).toSet
+      val canonBatches: Seq[TableBatch] = if (touched.isEmpty) Nil else {
         // prior staging rows of ONLY the touched groups: manifest-pruned
         // bucket read, then a semi join on the group key (null-safe — the
         // hash-fallback groups key on a null source id)

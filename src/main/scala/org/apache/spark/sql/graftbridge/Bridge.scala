@@ -72,10 +72,34 @@ object Bridge {
     case other => other
   }
 
-  def batchDf(data: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** A lineage-free frame over `data`'s rows: one `Scan ExistingRDD`
+    * leaf over `data.queryExecution.toRdd`, never streaming-tagged. The
+    * streaming sink re-wraps its single-action micro-batch frame with it,
+    * so the merge can run several actions over the same rows (the
+    * DeltaSink pattern). Over a PERSISTED frame the leaf reads the cache
+    * and carries the stats the cache reports when the view is built
+    * (exact once the cache is filled, the cached plan's estimate before),
+    * so joins over it can still broadcast. A plan built on the persisted
+    * frame itself re-walks (analysis, cache lookup) and re-prints (every
+    * SQL execution's and every adaptive re-plan's explain string) the
+    * whole lineage that produced the rows; a plan built on the view holds
+    * one leaf. The caller keeps such a frame persisted while the view is
+    * in use.
+    */
+  def lineageFree(data: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val ss = data.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    ss.internalCreateDataFrame(data.queryExecution.toRdd, data.schema,
-      isStreaming = false)
+    val qe = data.queryExecution
+    val rows = qe.toRdd
+    val stats = qe.optimizedPlan match {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        val s = r.computeStats()
+        Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(s.sizeInBytes, s.rowCount))
+      case _ => None
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(ss,
+      org.apache.spark.sql.execution.LogicalRDD(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(data.schema),
+        rows)(ss, originStats = stats))
   }
 
   /** Register a session-scoped SQL function builder (`sessionState` is

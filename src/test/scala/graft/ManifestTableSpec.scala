@@ -1881,4 +1881,170 @@ class ManifestTableSpec extends SparkSpec {
       assert(calls == 1, "a deterministic failure was retried as a GC race")
     } finally ManifestTable.commitFaultInjector = (_, _) => ()
   }
+
+  /** Three keyed tables with a change feed, one batch of `ids` each; the
+    * third declares `constraint.value_small` (value < 1000).
+    */
+  private def threeTables(ids: Range, day: Int): Seq[TableBatch] = Seq(
+    TableBatch("ta", rows(ids, day), Seq("event_id"), 4, changeFeed = true),
+    TableBatch("tb", rows(ids, day), Seq("event_id"), 4, changeFeed = true),
+    TableBatch("tc", rows(ids, day), Seq("event_id"), 4, changeFeed = true,
+      props = Map("constraint.value_small" -> "value < 1000")))
+
+  test("mergeBatch derives the tables of one batch concurrently: jobs of two tables' derivations are in flight at once") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val target = tmp("graft_overlap")
+    val root = new File(target)
+    ManifestTable.mergeBatch(root, "q", 0L, threeTables(0 until 400, 1))
+    // a job belongs to the table whose dirs its SQL execution's plan
+    // names (generation reads, generation and change-feed writes)
+    val tableOfExec = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]
+    val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]
+    val dirOf = "/data/(t[abc])/".r
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          val named = dirOf.findAllMatchIn(s.physicalPlanDescription)
+            .map(_.group(1)).toSet
+          if (named.size == 1) tableOfExec.put(s.executionId, named.head): Unit
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(x => started.put(j.jobId, (x.toLong, j.time)))
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        Option(started.get(j.jobId)).foreach { case (x, t0) =>
+          spans.add((x, t0, j.time)) }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ManifestTable.mergeBatch(root, "q", 1L, threeTables(200 until 600, 2))
+      // the listener bus is asynchronous: wait until every started job's
+      // end has been seen
+      val deadline = System.currentTimeMillis() + 30000
+      while (spans.size < started.size &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val byTable = spans.asScala.toSeq.flatMap { case (x, t0, t1) =>
+      Option(tableOfExec.get(x)).map(t => (t, t0, t1)) }
+    assert(byTable.map(_._1).toSet == Set("ta", "tb", "tc"),
+      s"derivation jobs not attributed to every table: $byTable")
+    val overlapping = for {
+      (a, a0, a1) <- byTable
+      (b, b0, b1) <- byTable
+      if a < b && a0 < b1 && b0 < a1
+    } yield (a, b)
+    assert(overlapping.nonEmpty,
+      s"no two tables' derivation jobs ran at once: ${byTable.sortBy(_._2)}")
+    val all = ManifestTable.readTable(spark, target, table = "tb")
+    assert(all.count() == 600L)
+  }
+
+  /** Every file under a table root's `data` dir, with its length. */
+  private def dataFiles(root: File): Map[String, Long] = {
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    walk(new File(root, "data")).map(f => f.getPath -> f.length).toMap
+  }
+
+  test("a multi-table mergeBatch whose one table violates its CHECK constraint throws that violation, writes no generation and leaves no writer behind") {
+    val target = tmp("graft_par_fail")
+    val root = new File(target)
+    ManifestTable.mergeBatch(root, "q", 0L, threeTables(0 until 100, 1))
+    val v0 = ManifestTable.read(root).get.version
+    // ids 700.. carry value = 1.5 * id >= 1000: only tc's constraint fails,
+    // and tc comes last, after two tables that plan cleanly
+    val batch = threeTables(650 until 720, 2)
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.mergeBatch(root, "q", 1L, batch)
+    }
+    assert(e.getMessage.contains("value_small"), e.getMessage)
+    assert(ManifestTable.read(root).get.version == v0, "a version committed")
+    val atReturn = dataFiles(root)
+    Thread.sleep(1500)
+    assert(dataFiles(root) == atReturn, "a derivation kept writing after the call")
+    // the violation surfaces while planning, before any table derives:
+    // no generation or change dir of the failed version holds a file
+    val target1 = s"-v${v0 + 1}-"
+    val written = atReturn.keys.filter(_.contains(target1))
+    assert(written.isEmpty, s"dirs of the failed attempt hold files: $written")
+    // the same batch without the violating rows lands in full
+    ManifestTable.mergeBatch(root, "q", 1L, threeTables(650 until 660, 2))
+    assert(ManifestTable.readTable(spark, target, table = "tc").count() == 110L)
+  }
+
+  test("an interrupted mergeBatch caller gets its InterruptedException only once every table's derivation has settled: no data file changes after it returns") {
+    val target = tmp("graft_interrupt")
+    val root = new File(target)
+    ManifestTable.mergeBatch(root, "q", 0L, threeTables(0 until 400, 1))
+    val v0 = ManifestTable.read(root).get.version
+    val derived0 = ManifestTable.mergeDeriveCount.get
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val caller = new Thread(() =>
+      try ManifestTable.mergeBatch(root, "q", 1L, threeTables(200 until 600, 2))
+      catch { case e: Throwable => outcome.set(e) }, "interrupted-merge")
+    caller.start()
+    // interrupt once a table has started deriving: the caller is then
+    // waiting on the tables' derivations, which have jobs to run
+    while (ManifestTable.mergeDeriveCount.get == derived0 && caller.isAlive)
+      Thread.sleep(1)
+    caller.interrupt()
+    caller.join(120000)
+    assert(!caller.isAlive, "the interrupted caller never returned")
+    val atReturn = dataFiles(root)
+    assert(outcome.get.isInstanceOf[InterruptedException], s"${outcome.get}")
+    assert(ManifestTable.read(root).get.version == v0, "a version committed")
+    Thread.sleep(3000)
+    assert(dataFiles(root) == atReturn,
+      "a derivation kept writing after the interrupted call returned")
+    // the re-run batch lands in full
+    ManifestTable.mergeBatch(root, "q", 1L, threeTables(200 until 600, 2))
+    assert(ManifestTable.readTable(spark, target, table = "tb").count() == 600L)
+  }
+
+  test("mergeBatch writes its intent once per attempt, naming every table's touched buckets") {
+    import java.nio.file.{FileSystems, StandardWatchEventKinds}
+    import java.util.concurrent.TimeUnit
+    val target = tmp("graft_intent_once")
+    val root = new File(target)
+    ManifestTable.mergeBatch(root, "q", 0L, threeTables(0 until 100, 1))
+    val intents = new File(root, "_intents")
+    intents.mkdirs()
+    val watch = FileSystems.getDefault.newWatchService()
+    intents.toPath.register(watch, StandardWatchEventKinds.ENTRY_CREATE)
+    // the declared intent as the publish step sees it
+    var declared: Seq[String] = Nil
+    ManifestTable.commitFaultInjector = (r, _) =>
+      if (r == root) declared = intents.listFiles
+        .filter(_.getName.endsWith(".intent")).toSeq
+        .flatMap(f => java.nio.file.Files.readAllLines(f.toPath)
+          .toArray.toSeq.map(_.toString).tail)
+    val batch = Seq(
+      TableBatch("ta", rows(0 until 3, 2), Seq("event_id"), 4),
+      TableBatch("tb", rows(100 until 140, 2), Seq("event_id"), 4),
+      TableBatch("tc", rows(300 until 301, 2), Seq("event_id"), 4))
+    try ManifestTable.mergeBatch(root, "q", 1L, batch)
+    finally ManifestTable.commitFaultInjector = (_, _) => ()
+    val created = scala.collection.mutable.ListBuffer.empty[String]
+    var key = watch.poll(2, TimeUnit.SECONDS)
+    while (key != null) {
+      key.pollEvents().forEach(ev => created += ev.context.toString)
+      key.reset()
+      key = watch.poll(500, TimeUnit.MILLISECONDS)
+    }
+    watch.close()
+    assert(created.count(_.endsWith(".intent")) == 1,
+      s"intent written ${created.count(_.endsWith(".intent"))} times: $created")
+    val expected = batch.map { tb =>
+      val bs = tb.rows.select(pmod(xxhash64(col("event_id")), lit(4)))
+        .distinct().collect().map(_.getLong(0)).sorted
+      s"${tb.name}:4:${bs.mkString(",")}"
+    }
+    assert(declared.sorted == expected.sorted)
+  }
 }

@@ -92,16 +92,19 @@ class R16OptSpec extends SparkSpec {
 
   test("codegen winnow equals the interpreted HOF formulation, element for element") {
     import graft.functions.TextOps
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    for (w <- Seq(1, 4, 7)) {
-      val both = docs.select(col("doc_id"),
-        TextOps.winnowFromHashes(TextOps.kgramHashes(col("text"), k = 8), w)
-          .as("fast"),
-        TextOps.winnowFromHashesHof(TextOps.kgramHashes(col("text"), k = 8), w)
-          .as("ref"))
+    // the hash arrays are computed once and bound as a column: passing
+    // the k-gram expression itself would re-hash the whole document for
+    // every window position of the HOF's slice lambda
+    val hashed = Tables.documents(spark, sf)
+      .select(col("doc_id"), TextOps.kgramHashes(col("text"), k = 8).as("hs"))
+      .persist()
+    try for (w <- Seq(1, 4, 7)) {
+      val both = hashed.select(col("doc_id"),
+        TextOps.winnowFromHashes(col("hs"), w).as("fast"),
+        TextOps.winnowFromHashesHof(col("hs"), w).as("ref"))
       val bad = both.filter(not(col("fast") <=> col("ref"))).count()
       assert(bad == 0, s"winnow_mins(w=$w) diverged from the HOF on $bad docs")
-    }
+    } finally { hashed.unpersist(); () }
     // degenerate inputs the corpus never exercises: empty and shorter-
     // than-window arrays
     val edge = spark.range(1).select(
