@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Registry for the per-session materialized tables (the stored-table
   * analogues: canonical headers/survivors, LSH candidates, fingerprint
-  * index, IVF index). Each module registers a releaser at init;
+  * index). Each module registers a releaser at init;
   * `release(spark)` unpersists and forgets every entry belonging to that
   * session — the unpersist hook a long-lived session needs after it is
   * done with a source dir (the caches are otherwise unbounded per

@@ -23,13 +23,11 @@ object Engine {
       // sessions built without it
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // columnar-cache compression is a CPU-for-memory trade: the stored
-      // staging tables/indexes are read-hot (10+ consumers each), and the
-      // A/B measured compression costing 3-6x on both the cache build and
-      // every cached read of the wide string grains. Default OFF for this
-      // engine (MEMORY_AND_DISK spill still bounds memory); the env knob
-      // restores Spark's default for memory-tight deployments.
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "false"))
+      // staging tables are read-hot (10+ consumers each), and the A/B
+      // measured compression costing 3-6x on both the cache build and
+      // every cached read of the wide string grains. OFF for this engine
+      // (MEMORY_AND_DISK spill still bounds memory).
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

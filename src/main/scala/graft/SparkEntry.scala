@@ -10,10 +10,8 @@ object SparkEntry {
     operators.Ingestion.defs,
     operators.Timeseries.defs,
     operators.Dedup.defs,
-    operators.Similarity.defs,
     operators.TextAnalysis.defs,
     operators.Curation.defs,
-    operators.Multimodal.defs,
     streaming.EventPipeline.defs
   )
 

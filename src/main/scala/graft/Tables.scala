@@ -108,5 +108,4 @@ object Tables {
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // columnar-cache compression is a CPU-for-memory trade: the stored
-      // staging tables/indexes are read-hot (10+ consumers each), and the
-      // A/B measured compression costing 3-6x on both the cache build and
-      // every cached read of the wide string grains. Default OFF for this
-      // engine (MEMORY_AND_DISK spill still bounds memory); the env knob
-      // restores Spark's default for memory-tight deployments.
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c → dump only those queries (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY")

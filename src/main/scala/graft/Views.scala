@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * query their warehouse). Base tables and the canonical model register
   * eagerly (view creation is lazy — no job runs until a query reads one);
   * operator results register on demand because several of them force
-  * one-time index fits (cluster labels, PCA, PQ codebooks) at DataFrame
-  * construction time.
+  * one-time fits (cluster labels, BPE merges) at DataFrame construction
+  * time.
   */
 object Views {
 
@@ -17,7 +17,7 @@ object Views {
   // throws on schema inference in any session that hasn't set the legacy
   // conf yet (exactly the fresh-session case register is for)
   private val baseTables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "documents", "embeddings")
+    "part", "orders", "lineitem", "documents")
 
   /** `graft_<table>` for every base table and `graft_can_txn` /
     * `graft_can_txn_line` / `graft_can_txn_anomaly` for the canonical

@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The merges table ships inside the expression (one reference object per
   * task — the broadcast-analogue for plan-embedded constants, exactly how
-  * the SRP plane matrix travels in HashExprs).
+  * the MinHash permutation constants travel in HashExprs).
   *
   * Oracle note: applying rank-valid merges SEQUENTIALLY in rank order
   * (each to fixpoint) is equivalent to the classic lowest-rank-first loop

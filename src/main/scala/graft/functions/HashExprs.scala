@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
 /** Native signature expressions over a pre-hashed `array<long>` token/
   * shingle column. The base xxhash64 pass runs once per element; these
@@ -30,9 +30,6 @@ object HashExprs {
   def simhash(hashes: Column): Column =
     Bridge.column(SimHashFromHashes(Bridge.expression(hashes)))
 
-  def srpBands(emb: Column, dim: Int, bitsPerBand: Int, bands: Int): Column =
-    Bridge.column(SrpBandKeys(Bridge.expression(emb), dim, bitsPerBand, bands))
-
   def winnowMins(hashes: Column, w: Int): Column =
     Bridge.column(WinnowMins(Bridge.expression(hashes), w))
 
@@ -47,83 +44,6 @@ object HashExprs {
 
   def tokenBigramPairs(toks: Column): Column =
     Bridge.column(TokenBigramPairs(Bridge.expression(toks)))
-}
-
-/** Sign-random-projection (cosine LSH, Charikar STOC'02) band keys for an
-  * `array<float>` embedding: bands×bits fixed Gaussian hyperplanes, one
-  * sign bit each, packed into per-band join keys (band index ‖ sign bits).
-  * An equi-join on a key collides vectors that agree on a whole band —
-  * P(bit match) = 1 − θ/π, so banding trades recall vs candidate volume
-  * exactly like MinHash-LSH does for Jaccard. One codegen'd pass; the
-  * hyperplanes are seeded constants so keys are reproducible anywhere.
-  */
-case class SrpBandKeys(child: Expression, dim: Int, bitsPerBand: Int,
-    bands: Int) extends UnaryExpression {
-  require(bitsPerBand > 0 && bitsPerBand <= 16 && bands > 0)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "srp_band_keys"
-
-  // flattened (bands*bitsPerBand) × dim Gaussian plane matrix
-  private lazy val planes: Array[Double] = {
-    val rnd = new scala.util.Random(0x51A9B00CL)
-    Array.fill(bands * bitsPerBand * dim)(rnd.nextGaussian())
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = math.min(arr.numElements(), dim)
-    val out = new Array[Long](bands)
-    var band = 0
-    while (band < bands) {
-      var bits = 0L
-      var bit = 0
-      while (bit < bitsPerBand) {
-        val base = (band * bitsPerBand + bit) * dim
-        var dot = 0.0
-        var k = 0
-        while (k < n) { dot += planes(base + k) * arr.getFloat(k); k += 1 }
-        if (dot > 0) bits |= 1L << bit
-        bit += 1
-      }
-      out(band) = (band.toLong << bitsPerBand) | bits
-      band += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val p = ctx.addReferenceObj("srpPlanes", planes, "double[]")
-      val out = ctx.freshName("out")
-      val band = ctx.freshName("band")
-      val bit = ctx.freshName("bit")
-      val bits = ctx.freshName("bits")
-      val base = ctx.freshName("base")
-      val dot = ctx.freshName("dot")
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = Math.min($c.numElements(), $dim);
-         |long[] $out = new long[$bands];
-         |for (int $band = 0; $band < $bands; $band++) {
-         |  long $bits = 0L;
-         |  for (int $bit = 0; $bit < $bitsPerBand; $bit++) {
-         |    int $base = ($band * $bitsPerBand + $bit) * $dim;
-         |    double $dot = 0.0;
-         |    for (int $k = 0; $k < $n; $k++) {
-         |      $dot += $p[$base + $k] * $c.getFloat($k);
-         |    }
-         |    if ($dot > 0) $bits |= 1L << $bit;
-         |  }
-         |  $out[$band] = ((long) $band << $bitsPerBand) | $bits;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SrpBandKeys =
-    copy(child = newChild)
 }
 
 /** K-slot MinHash signature from base shingle hashes: one pass, K affine

@@ -38,7 +38,7 @@ object Curation {
 
   // NOT fanned out: this module's per-row map work is plain tokenizing,
   // measured cheaper than the repartition exchange fanOut would add (the
-  // heavy hash chains live in Dedup/Similarity, which do fan out)
+  // heavy hash chains live in Dedup, which does fan out)
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
 
@@ -320,8 +320,7 @@ object Curation {
     // key.
     // (the loops create per-round plans inside their threads; their
     // consumers' ledger entries stay stable because the final label
-    // frames are lambda-free pinned caches — see Bench.planHash's
-    // lambda-ordinal normalization for the general guard)
+    // frames are lambda-free pinned caches)
     nearDupEdges(s, d)
     if (edgesUnderCap(s, d)) {
       // driver-resolved path: the second labeling reuses the first's

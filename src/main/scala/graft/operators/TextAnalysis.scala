@@ -38,7 +38,7 @@ object TextAnalysis {
 
   // NOT fanned out: this module's per-row map work is plain tokenizing
   // and regex screens, measured cheaper than the repartition exchange
-  // fanOut would add (the heavy hash chains in Dedup/Similarity fan out)
+  // fanOut would add (the heavy hash chains in Dedup fan out)
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
 

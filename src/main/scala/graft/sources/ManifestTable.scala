@@ -338,28 +338,85 @@ object ManifestTable {
   }
 
   // ---- serialization (JSON via the json4s that ships in Spark) ----
+  //
+  // One encoder and one decoder per record, shared by the three shapes a
+  // record is stored in: a full snapshot, a delta entry and a parquet
+  // checkpoint row. Each decoder also reads the record's older forms.
+
+  private def str(v: JValue): String = v match {
+    case JString(s) => s
+    case other => other.values.toString
+  }
+
+  private def long(v: JValue): Long = v match {
+    case JLong(n) => n
+    case JInt(n) => n.toLong
+    case other => other.values.toString.toLong
+  }
+
+  /** A count, version or timestamp that records older than the field
+    * lack: −1 (unknown, never guessed).
+    */
+  private def longOrUnset(v: JValue): Long = if (v == JNothing) -1L else long(v)
+
+  private def colsOf(v: JValue): Seq[String] = v match {
+    case JArray(cs) => cs.map(str)
+    case _ => Nil
+  }
+
+  /** A string map: table props, a generation's ndv and kll sketches. */
+  private def propsOf(v: JValue): Map[String, String] = v match {
+    case JObject(ps) => ps.collect { case (k, JString(s)) => k -> s }.toMap
+    case _ => Map.empty
+  }
+
+  private def statsJson(stats: Map[String, ColStat]): JObject =
+    JObject(stats.toSeq.sortBy(_._1).map { case (c, s) =>
+      c -> (JArray(List(JString(s.kind), JString(s.lo), JString(s.hi))): JValue)
+    }.toList)
+
+  private def statsOf(v: JValue): Map[String, ColStat] = v match {
+    case JObject(ss) => ss.collect {
+      case (c, JArray(List(kind, lo, hi))) => c -> ColStat(str(kind), str(lo), str(hi))
+      // pre-tagging layout: only numeric/temporal columns ever recorded
+      // stats, so untagged bounds ARE numeric-domain
+      case (c, JArray(List(lo, hi))) => c -> ColStat("num", str(lo), str(hi))
+    }.toMap
+    case _ => Map.empty
+  }
 
   private def genJson(g: BucketGen): JObject = JObject(
     List(
       "path" -> JString(g.path),
       "rows" -> JLong(g.rows),
-      "stats" -> JObject(g.stats.toSeq.sortBy(_._1).map { case (c, s) =>
-        c -> (JArray(List(JString(s.kind), JString(s.lo), JString(s.hi)))
-          : JValue)
-      }.toList)) ++
+      "stats" -> statsJson(g.stats)) ++
     (if (g.search.isEmpty) Nil
      else List("search" -> (JArray(g.search.map(JString(_)).toList): JValue))) ++
-    (if (g.ndv.isEmpty) Nil
-     else List("ndv" -> (JObject(g.ndv.toSeq.sortBy(_._1).map {
-       case (c, s) => c -> (JString(s): JValue) }.toList): JValue))) ++
-    (if (g.kll.isEmpty) Nil
-     else List("kll" -> (JObject(g.kll.toSeq.sortBy(_._1).map {
-       case (c, s) => c -> (JString(s): JValue) }.toList): JValue))))
+    (if (g.ndv.isEmpty) Nil else List("ndv" -> (propsJson(g.ndv): JValue))) ++
+    (if (g.kll.isEmpty) Nil else List("kll" -> (propsJson(g.kll): JValue))))
+
+  /** Absent `rows` = a pre-count generation, absent `search`/`ndv`/`kll`
+    * = written before those sidecars existed.
+    */
+  private def genOf(gv: JValue): BucketGen =
+    BucketGen(str(gv \ "path"), statsOf(gv \ "stats"), longOrUnset(gv \ "rows"),
+      colsOf(gv \ "search"), propsOf(gv \ "ndv"), propsOf(gv \ "kll"))
 
   private def bucketsJson(bs: Map[Long, Seq[BucketGen]]): JObject =
     JObject(bs.toSeq.sortBy(_._1).map { case (b, gens) =>
       b.toString -> (JArray(gens.map(genJson).toList): JValue)
     }.toList)
+
+  /** A bucket held ONE generation object before it held a list. */
+  private def bucketsOf(v: JValue): Map[Long, Seq[BucketGen]] = v match {
+    case JObject(bs) => bs.map { case (b, gvs) =>
+      b.toLong -> (gvs match {
+        case JArray(gens) => gens.map(genOf)
+        case single => Seq(genOf(single))
+      })
+    }.toMap
+    case _ => Map.empty
+  }
 
   private def propsJson(ps: Map[String, String]): JObject =
     JObject(ps.toSeq.sorted.map { case (k, v) => k -> (JString(v): JValue) }.toList)
@@ -402,93 +459,25 @@ object ManifestTable {
       ckptRef.map(r => "ckpt" -> (JString(r): JValue)).toList)))
   }
 
-  private def parse(text: String, root: File): Manifest = {
-    val j = JsonMethods.parse(text)
-    def str(v: JValue): String = v match {
-      case JString(s) => s
-      case other => other.values.toString
-    }
-    def long(v: JValue): Long = v match {
-      case JLong(n) => n
-      case JInt(n) => n.toLong
-      case other => other.values.toString.toLong
-    }
-    def gen(gv: JValue): BucketGen = {
-      val stats = (gv \ "stats") match {
-        case JObject(ss) => ss.collect {
-          case (c, JArray(List(kind, lo, hi))) =>
-            c -> ColStat(str(kind), str(lo), str(hi))
-          // pre-tagging layout: only numeric/temporal columns ever
-          // recorded stats, so untagged bounds ARE numeric-domain
-          case (c, JArray(List(lo, hi))) => c -> ColStat("num", str(lo), str(hi))
-        }.toMap
-        case _ => Map.empty[String, ColStat]
-      }
-      val rows = (gv \ "rows") match {
-        case JNothing => -1L // pre-count manifests: unknown, never guessed
-        case v => long(v)
-      }
-      val search = (gv \ "search") match {
-        case JArray(cs) => cs.map(str)
-        case _ => Nil // pre-search-index manifests: no sidecars recorded
-      }
-      val ndv = (gv \ "ndv") match {
-        case JObject(ns) => ns.collect { case (c, JString(s)) => c -> s }.toMap
-        case _ => Map.empty[String, String] // pre-NDV manifests
-      }
-      val kll = (gv \ "kll") match {
-        case JObject(ns) => ns.collect { case (c, JString(s)) => c -> s }.toMap
-        case _ => Map.empty[String, String]
-      }
-      BucketGen(str(gv \ "path"), stats, rows, search, ndv, kll)
-    }
-    def bucketsOf(v: JValue): Map[Long, Seq[BucketGen]] = v match {
-      case JObject(bs) => bs.map { case (b, gvs) =>
-        b.toLong -> (gvs match {
-          case JArray(gens) => gens.map(gen)
-          case single => Seq(gen(single))
-        })
-      }.toMap
-      case _ => Map.empty[Long, Seq[BucketGen]]
-    }
-    def propsOf(v: JValue): Map[String, String] = v match {
-      case JObject(ps) => ps.collect { case (k, JString(s)) => k -> s }.toMap
-      case _ => Map.empty
-    }
+  private def parse(j: JValue, root: File): Manifest = {
     val tables = (j \ "tables") match {
       case JObject(fields) => fields.map { case (name, tv) =>
-        val buckets = bucketsOf(tv \ "buckets")
         val changes = (tv \ "changes") match {
           case JArray(cs) => cs.map(cv =>
             ChangeGen(long(cv \ "version"), str(cv \ "path")))
           case _ => Nil
         }
-        val feedFrom = (tv \ "feedFrom") match {
-          case JNothing => -1L
-          case v => long(v)
-        }
-        val mergeKeys = (tv \ "mergeKeys") match {
-          case JArray(ks) => ks.map(str)
-          case _ => Nil
-        }
-        val numBuckets = (tv \ "numBuckets") match {
-          case JNothing => -1
-          case v => long(v).toInt
-        }
-        def cols(field: String): Seq[String] = (tv \ field) match {
-          case JArray(cs) => cs.map(str)
-          case _ => Nil
-        }
-        name -> TableState(str(tv \ "schema"), buckets, changes, feedFrom,
-          mergeKeys, numBuckets, cols("statsCols"), cols("searchCols"),
-          bucketsOf(tv \ "deltas"), propsOf(tv \ "props"))
+        name -> TableState(str(tv \ "schema"), bucketsOf(tv \ "buckets"),
+          changes, longOrUnset(tv \ "feedFrom"), colsOf(tv \ "mergeKeys"),
+          longOrUnset(tv \ "numBuckets").toInt, colsOf(tv \ "statsCols"),
+          colsOf(tv \ "searchCols"), bucketsOf(tv \ "deltas"),
+          propsOf(tv \ "props"))
       }.toMap
       case _ => Map.empty[String, TableState]
     }
     val info = CommitInfo(
       (j \ "op") match { case JString(s) => s; case _ => "" },
-      (j \ "ts") match { case JNothing => -1L; case v => long(v) },
-      (j \ "touched") match { case JArray(ts) => ts.map(str); case _ => Nil })
+      longOrUnset(j \ "ts"), colsOf(j \ "touched"))
     // a columnar snapshot carries its generation lists in a parquet
     // checkpoint sidecar instead of inline JSON
     val withGens = (j \ "ckpt") match {
@@ -532,52 +521,8 @@ object ManifestTable {
   }
 
   private def parseDelta(j: JValue): CommitDelta = {
-    def str(v: JValue): String = v match {
-      case JString(s) => s
-      case other => other.values.toString
-    }
-    def long(v: JValue): Long = v match {
-      case JLong(n) => n
-      case JInt(n) => n.toLong
-      case other => other.values.toString.toLong
-    }
-    def gen(gv: JValue): BucketGen = {
-      val stats = (gv \ "stats") match {
-        case JObject(ss) => ss.collect {
-          case (c, JArray(List(kind, lo, hi))) =>
-            c -> ColStat(str(kind), str(lo), str(hi))
-        }.toMap
-        case _ => Map.empty[String, ColStat]
-      }
-      val search = (gv \ "search") match {
-        case JArray(cs) => cs.map(str)
-        case _ => Nil
-      }
-      val ndv = (gv \ "ndv") match {
-        case JObject(ns) => ns.collect { case (c, JString(s)) => c -> s }.toMap
-        case _ => Map.empty[String, String]
-      }
-      val kll = (gv \ "kll") match {
-        case JObject(ns) => ns.collect { case (c, JString(s)) => c -> s }.toMap
-        case _ => Map.empty[String, String]
-      }
-      BucketGen(str(gv \ "path"), stats, long(gv \ "rows"), search, ndv, kll)
-    }
     val updates = (j \ "delta") match {
       case JObject(fields) => fields.map { case (name, uv) =>
-        def cols(field: String): Seq[String] = (uv \ field) match {
-          case JArray(cs) => cs.map(str)
-          case _ => Nil
-        }
-        def bucketsOf(v: JValue): Map[Long, Seq[BucketGen]] = v match {
-          case JObject(bs) => bs.map { case (b, gvs) =>
-            b.toLong -> (gvs match {
-              case JArray(gens) => gens.map(gen)
-              case single => Seq(gen(single))
-            })
-          }.toMap
-          case _ => Map.empty[Long, Seq[BucketGen]]
-        }
         name -> TableUpdate(
           str(uv \ "schema"),
           bucketsOf(uv \ "buckets"),
@@ -587,24 +532,22 @@ object ManifestTable {
             case _ => None
           },
           logicalChange = (uv \ "logicalChange") != JBool(false),
-          mergeKeys = cols("mergeKeys"),
-          numBuckets = long(uv \ "numBuckets").toInt,
+          mergeKeys = colsOf(uv \ "mergeKeys"),
+          numBuckets = longOrUnset(uv \ "numBuckets").toInt,
           replaceAll = (uv \ "replaceAll") == JBool(true),
-          statsCols = cols("statsCols"), searchCols = cols("searchCols"),
+          statsCols = colsOf(uv \ "statsCols"),
+          searchCols = colsOf(uv \ "searchCols"),
           deltaBuckets = bucketsOf(uv \ "deltaBuckets"),
           clearDeltas = (uv \ "clearDeltas") match {
             case JArray(vs) => vs.map(long)
             case _ => Nil
           },
-          props = (uv \ "props") match {
-            case JObject(ps) => ps.collect { case (k, JString(s)) => k -> s }.toMap
-            case _ => Map.empty
-          })
+          props = propsOf(uv \ "props"))
       }.toMap
       case _ => Map.empty[String, TableUpdate]
     }
     CommitDelta(long(j \ "version"), str(j \ "queryId"),
-      long(j \ "batchId"), str(j \ "op"), long(j \ "ts"), updates)
+      long(j \ "batchId"), str(j \ "op"), longOrUnset(j \ "ts"), updates)
   }
 
   /** Full snapshots at or under this many generation entries serialize
@@ -658,13 +601,9 @@ object ManifestTable {
       def add(kind: String, bs: Map[Long, Seq[BucketGen]]): Unit =
         bs.foreach { case (b, gens) =>
           gens.zipWithIndex.foreach { case (g, i) =>
-            val statsJson = JsonMethods.compact(JsonMethods.render(JObject(
-              g.stats.toSeq.sortBy(_._1).map { case (c, s) =>
-                c -> (JArray(List(JString(s.kind), JString(s.lo),
-                  JString(s.hi))): JValue)
-              }.toList)))
             rows.add(org.apache.spark.sql.Row(name, b, kind, i, g.path,
-              g.rows, statsJson, g.search, g.ndv, g.kll)): Unit
+              g.rows, JsonMethods.compact(JsonMethods.render(statsJson(g.stats))),
+              g.search, g.ndv, g.kll)): Unit
           }
         }
       add("base", ts.buckets)
@@ -690,14 +629,8 @@ object ManifestTable {
           rs.filter(_.getString(2) == kind).groupBy(_.getLong(1))
             .map { case (b, gs) =>
               b -> gs.sortBy(_.getInt(3)).toSeq.map { r =>
-                val stats = JsonMethods.parse(r.getString(6)) match {
-                  case JObject(ss) => ss.collect {
-                    case (c, JArray(List(JString(k), JString(lo),
-                        JString(hi)))) => c -> ColStat(k, lo, hi)
-                  }.toMap
-                  case _ => Map.empty[String, ColStat]
-                }
-                BucketGen(r.getString(4), stats, r.getLong(5),
+                BucketGen(r.getString(4),
+                  statsOf(JsonMethods.parse(r.getString(6))), r.getLong(5),
                   r.getSeq[String](7),
                   if (r.isNullAt(8)) Map.empty
                   else r.getMap[String, String](8).toMap,
@@ -714,14 +647,15 @@ object ManifestTable {
     * commits, DDL commits, and every pre-checkpointing manifest — the
     * legacy layout keeps parsing), Left = delta log entry.
     */
-  private def parseEntry(text: String,
-      root: File): Either[CommitDelta, Manifest] = {
-    val j = JsonMethods.parse(text)
+  private def parseEntry(j: JValue,
+      root: File): Either[CommitDelta, Manifest] =
     (j \ "delta") match {
       case _: JObject => Left(parseDelta(j))
-      case _ => Right(parse(text, root))
+      case _ => Right(parse(j, root))
     }
-  }
+
+  private def readJson(f: File): JValue =
+    JsonMethods.parse(new String(Files.readAllBytes(f.toPath), UTF_8))
 
   /** Reconstruct the manifest AT version `v` from the log: parse the
     * version file; a delta entry folds onto the reconstruction of `v-1`
@@ -732,7 +666,7 @@ object ManifestTable {
   private def reconstruct(root: File, v: Long): Option[Manifest] = {
     val f = versionFile(root, v)
     if (!f.exists) None
-    else parseEntry(new String(Files.readAllBytes(f.toPath), UTF_8), root) match {
+    else parseEntry(readJson(f), root) match {
       case Right(full) => Some(full)
       case Left(delta) =>
         (if (v <= 1) Some(empty) else reconstruct(root, v - 1))
@@ -775,7 +709,7 @@ object ManifestTable {
     val hint: Option[Manifest] =
       if (!f.exists) None
       else scala.util.Try(
-        parseEntry(new String(Files.readAllBytes(f.toPath), UTF_8), root))
+        parseEntry(readJson(f), root))
         .toOption.flatMap {
           case Right(full) => Some(full)
           case Left(_) => None
@@ -802,7 +736,7 @@ object ManifestTable {
     // version behind its siblings (one cheap exists-probe when nothing
     // is prepared)
     while (vf.exists || promotePrepared(root, v)) {
-      val entry = parseEntry(new String(Files.readAllBytes(vf.toPath), UTF_8), root)
+      val entry = parseEntry(readJson(vf), root)
       latest = entry match {
         case Right(full) => Some(full)
         case Left(delta) => Some(applyDelta(
@@ -851,6 +785,13 @@ object ManifestTable {
   private def branchBaseFile(root: File, name: String): File =
     new File(root, s"BRANCH.$name.base")
 
+  /** The version a branch forked at; −1 when its base file is gone or
+    * unreadable (a concurrent branch_drop).
+    */
+  private def branchBase(root: File, name: String): Long =
+    scala.util.Try(new String(Files.readAllBytes(
+      branchBaseFile(root, name).toPath), UTF_8).trim.toLong).getOrElse(-1L)
+
   private val branchLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
@@ -888,11 +829,10 @@ object ManifestTable {
     * the newest present file wins), exactly the main log's shape.
     */
   private def readBranch(root: File, name: String): Manifest = {
-    var latest = parse(new String(
-      Files.readAllBytes(branchFile(root, name).toPath), UTF_8), root)
+    var latest = parse(readJson(branchFile(root, name)), root)
     var vf = branchVersionFile(root, name, latest.version + 1)
     while (vf.exists) {
-      latest = parse(new String(Files.readAllBytes(vf.toPath), UTF_8), root)
+      latest = parse(readJson(vf), root)
       vf = branchVersionFile(root, name, latest.version + 1)
     }
     latest
@@ -1116,8 +1056,7 @@ object ManifestTable {
   def branches(root: File): Seq[(String, Long, Long)] =
     branchNames(root)
       .flatMap { n =>
-        val base = scala.util.Try(new String(Files.readAllBytes(
-          branchBaseFile(root, n).toPath), UTF_8).trim.toLong).getOrElse(-1L)
+        val base = branchBase(root, n)
         scala.util.Try(readBranch(root, n).version).toOption
           .map(v => (n, base, v))
       }
@@ -1360,8 +1299,7 @@ object ManifestTable {
     val pf = preparedFile(root, v)
     if (!pf.exists) return versionFile(root, v).exists
     if (versionFile(root, v).exists) return true // promoted or outraced
-    val parsed = scala.util.Try(JsonMethods.parse(
-      new String(Files.readAllBytes(pf.toPath), UTF_8))).getOrElse(return false)
+    val parsed = scala.util.Try(readJson(pf)).getOrElse(return false)
     def s(v: JValue): Option[String] = v match {
       case JString(x) => Some(x); case _ => None
     }
@@ -1649,38 +1587,27 @@ object ManifestTable {
     m.tables.values.toSeq.flatMap(retainHoursOf(_))
       .reduceOption(_ max _).map(_ * 3600000L)
 
-  /** Commit timestamp of version `v`'s log entry — both entry shapes
-    * carry a top-level `ts`; a light parse that never loads parquet
-    * checkpoints.
+  /** Version `v`'s log entry as JSON — a light parse that never loads
+    * parquet checkpoints. None when the entry is gone (aged out) or
+    * unreadable.
     */
-  private def entryTs(root: File, v: Long): Option[Long] = {
+  private def entryJson(root: File, v: Long): Option[JValue] = {
     val f = versionFile(root, v)
-    if (!f.exists) None
-    else scala.util.Try {
-      (JsonMethods.parse(
-        new String(Files.readAllBytes(f.toPath), UTF_8)) \ "ts") match {
-        case JInt(x) => x.toLong
-        case JLong(x) => x
-        case _ => -1L
-      }
-    }.toOption.filter(_ >= 0)
+    if (!f.exists) None else scala.util.Try(readJson(f)).toOption
   }
 
-  /** Operation marker of version `v`'s log entry (e.g. `PUBLISH:<name>`)
-    * — the same light parse as [[entryTs]], used by the publish
-    * crash-recovery check.
+  /** Commit timestamp of version `v`'s log entry — both entry shapes
+    * carry a top-level `ts`.
     */
-  private def entryOp(root: File, v: Long): Option[String] = {
-    val f = versionFile(root, v)
-    if (!f.exists) None
-    else scala.util.Try {
-      (JsonMethods.parse(
-        new String(Files.readAllBytes(f.toPath), UTF_8)) \ "op") match {
-        case JString(s) => s
-        case _ => ""
-      }
-    }.toOption.filter(_.nonEmpty)
-  }
+  private def entryTs(root: File, v: Long): Option[Long] =
+    entryJson(root, v).flatMap(j => scala.util.Try(long(j \ "ts")).toOption)
+      .filter(_ >= 0)
+
+  /** Operation marker of version `v`'s log entry (e.g. `PUBLISH:<name>`),
+    * used by the publish crash-recovery check.
+    */
+  private def entryOp(root: File, v: Long): Option[String] =
+    entryJson(root, v).map(_ \ "op").collect { case JString(s) if s.nonEmpty => s }
 
   /** Audit `touched` record of version `v`'s log entry — the tables the
     * commit modified, the proof the publish rebase gate needs to show a
@@ -1688,14 +1615,10 @@ object ManifestTable {
     * when the entry is gone (aged out) or unreadable: the gate must then
     * refuse rather than assume disjointness.
     */
-  private def entryTouched(root: File, v: Long): Option[Seq[String]] = {
-    val f = versionFile(root, v)
-    if (!f.exists) None
-    else scala.util.Try {
-      val j = JsonMethods.parse(
-        new String(Files.readAllBytes(f.toPath), UTF_8))
+  private def entryTouched(root: File, v: Long): Option[Seq[String]] =
+    entryJson(root, v).flatMap { j =>
       (j \ "touched") match {
-        case JArray(ts) => Some(ts.collect { case JString(s) => s })
+        case ts: JArray => Some(colsOf(ts))
         case _ => (j \ "delta") match {
           // a delta entry's update map is keyed by table — exactly the
           // commit's touched set (full snapshots carry `touched`; a
@@ -1704,8 +1627,7 @@ object ManifestTable {
           case _ => None
         }
       }
-    }.toOption.flatten
-  }
+    }
 
   /** Is `v` within `root`'s time window (when one is declared)? */
   private def withinTimeWindow(root: File, ms: Option[Long], v: Long): Boolean =
@@ -2168,7 +2090,7 @@ object ManifestTable {
       val p = new File(root, ManifestName)
       if (!p.exists) 0L
       else scala.util.Try(
-        parse(new String(Files.readAllBytes(p.toPath), UTF_8), root).version)
+        parse(readJson(p), root).version)
         .getOrElse(0L)
     }
     // the anchor can't assume fulls sit at multiples of the CURRENT
@@ -2182,8 +2104,7 @@ object ManifestTable {
       while (found < 0 && v >= 0) {
         val f = versionFile(root, v)
         if (!f.exists) found = v // already swept below here: safe floor
-        else if (scala.util.Try(parseEntry(
-            new String(Files.readAllBytes(f.toPath), UTF_8), root).isRight)
+        else if (scala.util.Try(parseEntry(readJson(f), root).isRight)
             .getOrElse(true)) found = v
         else v -= 1
       }
@@ -2288,11 +2209,9 @@ object ManifestTable {
           // lineage is exactly the ambiguity a branch exists to prevent.
           case Some(b) =>
             val bf = branchVersionFile(root, b, v)
-            val base = scala.util.Try(new String(Files.readAllBytes(
-              branchBaseFile(root, b).toPath), UTF_8).trim.toLong)
-              .getOrElse(-1L)
+            val base = branchBase(root, b)
             if (bf.exists)
-              parse(new String(Files.readAllBytes(bf.toPath), UTF_8), root)
+              parse(readJson(bf), root)
             else if (v <= base) fromMain()
             else throw new java.io.FileNotFoundException(
               s"version $v is not on branch '$b' of $root " +
@@ -4429,15 +4348,13 @@ object ManifestTable {
     // mirroring what VERSION AS OF resolves (see resolve())
     val files = Option(root.listFiles).getOrElse(Array.empty)
     def parsed(f: File) = scala.util.Try(
-      parseEntry(new String(Files.readAllBytes(f.toPath), UTF_8), root))
+      parseEntry(readJson(f), root))
       .toOption
     val mainEntries = files
       .filter(_.getName.startsWith(ManifestName + ".v")).flatMap(parsed)
     val entries = activeBranch(root) match {
       case Some(b) =>
-        val base = scala.util.Try(new String(Files.readAllBytes(
-          branchBaseFile(root, b).toPath), UTF_8).trim.toLong)
-          .getOrElse(-1L)
+        val base = branchBase(root, b)
         val prefix = s"BRANCH.$b.v"
         mainEntries.filter(_.fold(_.version, _.version) <= base) ++
           files.filter(f => f.getName.startsWith(prefix) &&
@@ -4481,7 +4398,7 @@ object ManifestTable {
     def stamps(fs: Array[File]): Array[(Long, Long)] = fs
       .flatMap { f =>
         scala.util.Try(
-          parseEntry(new String(Files.readAllBytes(f.toPath), UTF_8), root)).toOption
+          parseEntry(readJson(f), root)).toOption
       }
       .map {
         case Right(m) => (m.version, m.info.timeMs)
@@ -4490,9 +4407,7 @@ object ManifestTable {
     val mains = stamps(files.filter(_.getName.startsWith(ManifestName + ".v")))
     val candidates = activeBranch(root) match {
       case Some(b) =>
-        val base = scala.util.Try(new String(Files.readAllBytes(
-          branchBaseFile(root, b).toPath), UTF_8).trim.toLong)
-          .getOrElse(-1L)
+        val base = branchBase(root, b)
         val prefix = s"BRANCH.$b.v"
         mains.filter(_._1 <= base) ++ stamps(files.filter(f =>
           f.getName.startsWith(prefix) &&

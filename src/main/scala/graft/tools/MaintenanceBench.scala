@@ -52,9 +52,10 @@ object MaintenanceBench {
     val source = orders.filter(col("o_orderkey") % 10 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * 1.1)
       .unionByName(orders.filter(col("o_orderkey") % 50 === 0)
-        // clear of every ScaleUp replica key space (i * 1e9): at sf1
-        // a 1e9 shift would land inserts ON replica-1 keys and trip
-        // MERGE's cardinality check with duplicate source keys
+        // clear of every replicated key space (i * 1e9) a scaled-up
+        // input may carry: a 1e9 shift would land inserts ON replica-1
+        // keys and trip MERGE's cardinality check with duplicate
+        // source keys
         .withColumn("o_orderkey", col("o_orderkey") + 100000000000L))
       .persist()
     source.count(): Unit

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. `ExpressionUtils` is private[sql], so custom
-  * Catalyst expressions (graft.functions.FloatVectorDot) reach it through
+  * Catalyst expressions (graft.functions.LineExprs) reach it through
   * this shim package — the conventional pattern for Spark extension
   * libraries that ship native expressions without a session extension.
   */
@@ -21,13 +21,6 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Re-plan a streaming micro-batch DataFrame as a plain BATCH frame over
-    * the same rows (`internalCreateDataFrame` is private[sql]). A v1
-    * `Sink.addBatch` receives a frame whose plan is streaming-tagged; a
-    * sink that runs several actions over it (the manifest merge does —
-    * bucket split, per-bucket writes) must re-wrap it first, exactly as
-    * DeltaSink does.
-    */
   /** DataFrame over an RDD of InternalRows under a known schema
     * (`internalCreateDataFrame` again) — how the row-level write's commit
     * re-reads its staged UnsafeRow files as a queryable frame.

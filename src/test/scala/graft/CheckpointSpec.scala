@@ -15,7 +15,7 @@ import org.apache.spark.sql.DataFrame
   * checkpoint. Long-history cost contract: per-commit serialization no
   * longer grows with the table's generation count.
   */
-class CheckpointSpec extends SparkSpec {
+class CheckpointSpec extends SparkSpec with org.scalatest.LoneElement {
   import spark.implicits._
 
   private def tmp(prefix: String): File =
@@ -188,5 +188,80 @@ class CheckpointSpec extends SparkSpec {
     // and the pointer cache (also ckpt-referenced) serves reads
     val viaPointer = ManifestTable.read(root).get
     assert(viaPointer.version == big.version)
+  }
+
+  test("one generation carrying every field round-trips equal through a delta entry, a full snapshot and a parquet checkpoint") {
+    import ManifestTable.{BucketGen, ColStat}
+    def gensOf(root: File): Seq[BucketGen] =
+      ManifestTable.read(root).get.table("t").gens
+    // delta entry: the first append writes v1 as a delta entry; with the
+    // live pointer (a full snapshot) removed, the read folds v1's entry
+    val viaDelta = tmp("graft_codec_delta")
+    ManifestTable.mergeBatch(viaDelta, "q", 0L, Seq(TableBatch("t",
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "payload"),
+      Seq("id"), 1, statsCols = Seq("id", "payload"), append = true,
+      searchCols = Seq("payload"))))
+    assert(new String(Files.readAllBytes(
+      new File(viaDelta, "MANIFEST.v1").toPath)).contains("\"delta\""))
+    assert(new File(viaDelta, "MANIFEST").delete())
+    val m = ManifestTable.read(viaDelta).get
+    val g = m.table("t").gens.loneElement
+    // every field is present, so an equal round trip proves each survives
+    assert(g.stats("id").kind == "num" && g.stats("payload").kind == "str")
+    assert(g.stats("payload") == ColStat("str", "a", "c"))
+    assert(g.rows == 3L)
+    assert(g.search.nonEmpty)
+    assert(g.ndv.keySet == Set("id", "payload"))
+    assert(g.kll.keySet == Set("id"))
+
+    // full snapshot: a commit without a delta writes the inline JSON
+    val viaFull = tmp("graft_codec_full")
+    ManifestTable.commit(viaFull, m)
+    assert(!new String(Files.readAllBytes(
+      new File(viaFull, "MANIFEST.v1").toPath)).contains("\"ckpt\""))
+    assert(gensOf(viaFull) == Seq(g))
+
+    // parquet checkpoint: past CheckpointInlineMax generations the
+    // snapshot's generation lists land in `_ckpt/`
+    val viaCkpt = tmp("graft_codec_ckpt")
+    val wide = m.table("t").copy(buckets = Map(0L ->
+      Seq.fill(ManifestTable.CheckpointInlineMax + 1)(g)))
+    ManifestTable.commit(viaCkpt, m.copy(tables = Map("t" -> wide)))
+    assert(new String(Files.readAllBytes(
+      new File(viaCkpt, "MANIFEST.v1").toPath)).contains("\"ckpt\""))
+    val back = gensOf(viaCkpt)
+    assert(back.size == ManifestTable.CheckpointInlineMax + 1)
+    assert(back.forall(_ == g))
+  }
+
+  test("a legacy generation (untagged bounds, no row count) decodes the same from a full snapshot and a delta entry") {
+    import ManifestTable.ColStat
+    val root = tmp("graft_codec_legacy")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType))).json
+    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    def legacyGen(path: String, lo: Int, hi: Int) =
+      s"""{"path": "$path", "stats": {"id": ["$lo", "$hi"]}}"""
+    Files.writeString(new File(root, "MANIFEST.v1").toPath,
+      s"""{"version": 1, "queryId": "q", "lastBatch": 0,
+         |  "tables": {"t": {"schema": "${esc(schema)}", "numBuckets": 2,
+         |    "buckets": {"0": [${legacyGen("b0-g1", 1, 5)}]}}}}""".stripMargin)
+    Files.writeString(new File(root, "MANIFEST.v2").toPath,
+      s"""{"version": 2, "queryId": "q", "batchId": 1, "op": "APPEND",
+         |  "ts": 1700000000000,
+         |  "delta": {"t": {"schema": "${esc(schema)}", "append": true,
+         |    "numBuckets": 2,
+         |    "buckets": {"1": [${legacyGen("b1-g2", 6, 9)}]}}}}""".stripMargin)
+    val ts = ManifestTable.read(root).get.table("t")
+    val fromFull = ts.buckets(0L).loneElement
+    val fromDelta = ts.buckets(1L).loneElement
+    assert(fromFull.stats == Map("id" -> ColStat("num", "1", "5")))
+    assert(fromDelta.stats == Map("id" -> ColStat("num", "6", "9")))
+    assert(fromFull.rows == -1L && fromDelta.rows == -1L)
+    assert(fromFull.copy(path = "", stats = Map.empty) ==
+      fromDelta.copy(path = "", stats = Map.empty))
+    // an unknown count is never guessed into a metadata answer
+    assert(ts.rowCount.isEmpty)
   }
 }

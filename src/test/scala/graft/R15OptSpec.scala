@@ -23,85 +23,6 @@ class R15OptSpec extends SparkSpec {
       "driver-side BPE diverged from the distributed loop")
   }
 
-  test("ArgMaxCosine matches the broadcast-join max_by formulation") {
-    import graft.functions.{NearestIdx, VectorOps}
-    val e = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding"),
-        VectorOps.norm(col("embedding")).as("nrm"))
-    val cRows = e.filter(col("vec_id") % 37 === 0)
-      .select(col("vec_id"), col("embedding"), col("nrm")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-      .sortBy(_._1)
-    assert(cRows.length > 3)
-    val dim = cRows.head._2.length
-    val flat = new Array[Float](cRows.length * dim)
-    cRows.zipWithIndex.foreach { case ((_, v, _), i) =>
-      System.arraycopy(v, 0, flat, i * dim, v.length) }
-    val viaExpr = e.select(col("vec_id"),
-      NearestIdx.nearestCentroidId(col("embedding"), col("nrm"),
-        cRows.map(_._1), flat, cRows.map(_._3), dim).as("c_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val cdf = spark.createDataFrame(
-      cRows.map { case (id, v, n) => (id, v.toSeq, n) }.toSeq)
-      .toDF("c_id", "c_emb", "c_nrm")
-    val viaJoin = e.join(broadcast(cdf), lit(true))
-      .withColumn("ccos", VectorOps.cosinePre(
-        col("embedding"), col("nrm"), col("c_emb"), col("c_nrm")))
-      .groupBy("vec_id")
-      .agg(max_by(col("c_id"), col("ccos")).as("c_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(viaExpr == viaJoin,
-      "codegen argmax diverged from the join formulation")
-  }
-
-  test("ArgMinD2Sub matches the broadcast-join min(struct) formulation") {
-    import graft.functions.{NearestIdx, VectorOps}
-    val subDim = 8
-    val pqM = 8
-    val sub = Tables.embeddings(spark, sf)
-      .select(col("vec_id"),
-        explode(array((0 until pqM).map(m =>
-          struct(lit(m).as("m"),
-            slice(col("embedding"), m * subDim + 1, subDim).as("sv"))): _*))
-          .as("s"))
-      .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
-    // a small codebook: subvectors of every 41st vector, code = rank
-    val seedIds = Tables.embeddings(spark, sf).select(col("vec_id"))
-      .filter(col("vec_id") % 41 === 0).collect().map(_.getLong(0)).sorted
-    val seedVecs = Tables.embeddings(spark, sf)
-      .filter(col("vec_id").isin(seedIds: _*))
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toMap
-    val entries = (for (m <- 0 until pqM; (id, ci) <- seedIds.zipWithIndex)
-      yield (m, ci, seedVecs(id).slice(m * subDim, m * subDim + subDim)))
-      .toArray.sortBy(t => (t._1, t._2))
-    val offsets = new Array[Int](pqM + 1)
-    entries.foreach { case (m, _, _) => offsets(m + 1) += 1 }
-    (1 to pqM).foreach(m => offsets(m) += offsets(m - 1))
-    val cws = new Array[Float](entries.length * subDim)
-    val cwn2 = new Array[Double](entries.length)
-    entries.zipWithIndex.foreach { case ((_, _, cw), i) =>
-      System.arraycopy(cw, 0, cws, i * subDim, cw.length)
-      cwn2(i) = cw.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
-    }
-    val viaExpr = sub.select(col("vec_id"), col("m"),
-      NearestIdx.nearestCode(col("sv"), col("m"), offsets,
-        entries.map(_._2), cws, cwn2, subDim).as("code"))
-      .collect().map(r => ((r.getLong(0), r.getInt(1)), r.getInt(2))).toMap
-    val cbDf = spark.createDataFrame(
-      entries.map { case (m, c, cw) => (m, c, cw.toSeq) }.toSeq)
-      .toDF("m", "code", "cw")
-      .withColumn("cwn2", VectorOps.dot(col("cw"), col("cw")))
-    val d2 = col("cwn2") - lit(2.0) * VectorOps.dot(col("sv"), col("cw"))
-    val viaJoin = sub.join(broadcast(cbDf), Seq("m"))
-      .withColumn("d2", d2)
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("d2"), col("code"))).getField("code").as("code"))
-      .collect().map(r => ((r.getLong(0), r.getInt(1)), r.getInt(2))).toMap
-    assert(viaExpr == viaJoin,
-      "codegen argmin diverged from the join formulation")
-  }
-
   test("fanOut is the identity when the scan is already parallel enough") {
     val docs = Tables.documents(spark, sf)
     val fanned = Tables.fanOut(docs)

@@ -262,17 +262,6 @@ class R16OptSpec extends SparkSpec {
       "range-anti-join dedup diverged from the covered-position reference")
   }
 
-  test("ArgMaxCosine rejects a zero-norm candidate at construction") {
-    // a zero norm scores NaN for every row, where the expression's `>`
-    // and the max_by join it is pinned against DISAGREE (ADVICE r15) —
-    // the degenerate matrix must fail loudly, not diverge silently
-    intercept[IllegalArgumentException] {
-      functions.NearestIdx.nearestCentroidId(
-        lit(Array(1f, 0f)), lit(1.0),
-        Array(1L, 2L), Array(1f, 0f, 0f, 0f), Array(1.0, 0.0), 2)
-    }
-  }
-
   test("every order-only (global) window is an attributed bounded grain") {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

@@ -18,7 +18,7 @@ out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
-          "lineitem","events","documents","embeddings"]:
+          "lineitem","events","documents"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
 oracles = json.load(open(f"{out}/oracle_sql.json"))
